@@ -11,28 +11,7 @@ object Bench {
     require(cpus.matches("\\d+"),
       s"SPARK_GRAFT_CPUS must be a positive integer, got '$cpus' " +
         "(local[*] is not supported — pass the actual core count)")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // commit algorithm 2: task outputs promote directly instead of a
-      // second sequential driver-side rename pass per write job. The
-      // engine's own tables get their atomicity from the manifest
-      // commit (staged dirs + CAS), not from the Hadoop committer, so
-      // v2's weaker failure atomicity costs nothing here — and at any
-      // scale, v1's O(files) driver rename pass is pure overhead.
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF="k=v;k2=v2": runtime confs for route-forcing
-    // probe runs (e.g. spark.graft.dedup.maxBroadcastSigs=0 to measure
-    // the banded simhash path below its natural engagement size)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      val i = kv.indexOf('=')
-      if (i > 0) spark.conf.set(kv.take(i).trim, kv.drop(i + 1).trim)
-    })
+    val spark = GraftSession.local(cpus)
     // Warmup: touch every table once (parquet footers, FS cache, codegen,
     // executor threads) so per-query timings measure the query, not
     // first-job session initialization.

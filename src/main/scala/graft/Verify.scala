@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,20 +7,8 @@ object Verify {
     require(args.length == 2, "usage: graft.Verify <sfDir> <outDir>")
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores ts as TIMESTAMP(NANOS); Spark has no ns
-      // timestamp type, so read it as epoch-nanos long (oracle: epoch_ns(ts))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // see Bench: task outputs promote directly; engine-table
-      // atomicity comes from the manifest commit, not this committer
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     new java.io.File(outDir).mkdirs()
     // comma-separated allowlist for iterating on a subset locally; the
     // driver never sets it, so the contract is unchanged

@@ -58,17 +58,28 @@ object BloomSidecar {
     * One pass per column (driver holds one filter at a time); expected
     * items = the directory's row count — directories are single write
     * jobs, so the count is the right capacity without a distinct pass.
+    * A column with no non-null value (every column of an emptied
+    * directory) gets an EMPTY filter, which rejects every probe — right,
+    * since no equality probe can match there. `bloom_filter_agg` returns
+    * null over such input, which `df.stat.bloomFilter` cannot read.
     */
   def write(s: SparkSession, dataDir: String, cols: Seq[String]): Unit = {
+    import org.apache.spark.sql.functions.{col, count, lit}
     val df = SchemaMemo.read(s, Seq(dataDir))
     val typed = cols.map { c =>
       val dt = df.schema(c).dataType
       (c, tag(dt).getOrElse(throw new IllegalArgumentException(
         s"no bloom-sidecar support for column $c of type $dt")))
     }
-    val expected = math.max(df.count(), 1024L)
-    val filters = typed.map { case (c, t) =>
-      (c, t, df.stat.bloomFilter(c, expected, fpp(s)))
+    // row count and per-column non-null counts in the one job the bare
+    // row count took
+    val counts = df.agg(count(lit(1)), cols.map(c => count(col(c))): _*)
+      .head()
+    val expected = math.max(counts.getLong(0), 1024L)
+    val filters = typed.zipWithIndex.map { case ((c, t), i) =>
+      (c, t,
+        if (counts.getLong(1 + i) == 0L) BloomFilter.create(expected, fpp(s))
+        else df.stat.bloomFilter(c, expected, fpp(s)))
     }
     val f = new Path(dataDir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)

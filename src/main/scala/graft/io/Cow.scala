@@ -38,7 +38,9 @@ private[io] object Cow {
   /** Rewrite every hit directory through `xform` into
     * `stagingDir/prefix-vV-N`, carrying skip-stats sidecars so
     * maintenance never costs a table its scan planning. Returns the
-    * replacements in hit order.
+    * replacements in hit order. The per-directory rewrites are
+    * independent jobs over disjoint inputs and outputs, so they run
+    * through [[GraftPar.all]] instead of back to back.
     *
     * Staging names are keyed by `baseVersion` (the version the rewrite
     * was planned against): a LATER maintenance run on the same staging
@@ -47,37 +49,23 @@ private[io] object Cow {
     * run (same base version) overwrites its own orphan instead of
     * tripping on it. Two concurrent runs at the same version are the
     * manifest's documented single-committer scope.
+    *
+    * On failure: one directory's rewrite throwing does not stop its
+    * siblings — the first failure rethrows only after every sibling has
+    * landed its output, and nothing is committed. Those landed outputs
+    * are orphans under `stagingDir`; a retry at the same base version
+    * overwrites them, and [[Manifest.sweepAllOrphans]] over the staging
+    * root deletes them without touching a committed directory.
     */
   def rewrite(s: SparkSession, hit: Seq[String], stagingDir: String,
       prefix: String, baseVersion: Int,
-      xform: DataFrame => DataFrame): Seq[String] = {
-    // The per-directory rewrites are INDEPENDENT jobs over disjoint
-    // inputs and outputs, so submit them concurrently (bounded pool)
-    // instead of serially — a takedown touching 20 directories was 20
-    // back-to-back one-task jobs with the cluster idle in every tail
-    // (guide §2.6). SchemaMemo.read replaces the bare read's
-    // per-directory schema-inference job. Result order and names are
-    // unchanged; the first failure rethrows after all settle, so no
-    // branch is abandoned mid-write.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(hit.size, 8)))
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    try {
-      val futs = hit.zipWithIndex.map { case (d, i) =>
-        Future {
-          val outd = s"$stagingDir/$prefix-v$baseVersion-$i"
-          xform(SchemaMemo.read(s, Seq(d)))
-            .write.mode("overwrite").parquet(outd)
-          SkipStats.carry(s, d, outd)
-          BloomSidecar.carry(s, d, outd)
-          outd
-        }
-      }
-      val done = futs.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-      done.map(_.get)
-    } finally pool.shutdown()
-  }
+      xform: DataFrame => DataFrame): Seq[String] =
+    GraftPar.all(hit.zipWithIndex.map { case (d, i) => () =>
+      val outd = s"$stagingDir/$prefix-v$baseVersion-$i"
+      xform(SchemaMemo.read(s, Seq(d)))
+        .write.mode("overwrite").parquet(outd)
+      SkipStats.carry(s, d, outd)
+      BloomSidecar.carry(s, d, outd)
+      outd
+    })
 }

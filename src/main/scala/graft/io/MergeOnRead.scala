@@ -337,17 +337,9 @@ object MergeOnRead {
     // private staging dirs — submit both at once (guide §2.6) instead
     // of serially; an empty key list (pure-preimage slice) deletes
     // both staged dirs, exactly the old early-return
-    locally {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val fk = Future(
-        keys.select(col(keyCol)).distinct().write.parquet(tombDir))
-      val fr = Future(rows.write.parquet(insDir))
-      val rk = scala.util.Try(Await.result(fk, Duration.Inf))
-      val rr = scala.util.Try(Await.result(fr, Duration.Inf))
-      rk.get; rr.get
-    }
+    GraftPar.all(Seq(
+      () => keys.select(col(keyCol)).distinct().write.parquet(tombDir),
+      () => rows.write.parquet(insDir)))
     val f = new Path(tombDir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     if (Manifest.dirRowCount(s, Seq(tombDir)) == 0L) {

@@ -13,7 +13,7 @@ import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType,
   StructType, UserDefinedType}
 
-import graft.io.{Manifest, MergeOnRead, SkipStats}
+import graft.io.{GraftPar, Manifest, MergeOnRead, SkipStats}
 
 /** WRITE paths for `format("graft")`.
   *
@@ -436,24 +436,6 @@ object GraftPartitionedWrite {
     else Manifest.commitAll(s, root, leaves, seedAnn = seed)
   }
 
-  /** Run `task` over every element with a small driver-side thread
-    * pool — the installer for per-leaf SIDECAR FILE writes, which are
-    * tiny but latency-bound (one create round trip each): sequential
-    * at 1024 partition values on an object store is minutes of commit
-    * latency for kilobytes of data. Bounded parallelism, fail-fast.
-    */
-  private def inParallel[T](items: Seq[T])(task: T => Unit): Unit = {
-    if (items.isEmpty) return
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, items.size))
-    try {
-      val futures = items.map(i => pool.submit(new Runnable {
-        override def run(): Unit = task(i)
-      }))
-      futures.foreach(_.get()) // propagate the first failure
-    } finally pool.shutdown()
-  }
-
   /** Every leaf's skip-stats from ONE grouped aggregation (grouping on
     * each row's source directory) — a per-leaf [[SkipStats.write]]
     * would be one driver-sequential Spark job per partition value,
@@ -504,10 +486,12 @@ object GraftPartitionedWrite {
       }
     }
     // parallel file installs: the sidecars were all computed by the ONE
-    // grouped job above; landing them is latency-bound small IO
-    inParallel(rendered.toSeq) { case (d, body, _) =>
-      SkipStats.installRendered(s, d, body)
-    }
+    // grouped job above; landing them is latency-bound small IO (one
+    // create round trip each — minutes at 1024 partition values on an
+    // object store if sequential)
+    GraftPar.all(rendered.toSeq.map { case (d, body, _) =>
+      () => SkipStats.installRendered(s, d, body)
+    })
     leaves.filterNot(rendered.map(_._1).toSet)
       .foreach(d => SkipStats.write(s, d, cols))
     (rendered.map(t => t._1 -> t._2).toMap,
@@ -576,9 +560,9 @@ object GraftPartitionedWrite {
         Some((d, filters))
       }
     }
-    inParallel(covered.toSeq) { case (d, filters) =>
-      BloomSidecar.install(s, d, filters)
-    }
+    GraftPar.all(covered.toSeq.map { case (d, filters) =>
+      () => BloomSidecar.install(s, d, filters)
+    })
     // coverage per leaf = the columns whose filter actually LANDED:
     // the grouped agg emits no filter for a column all-null within a
     // leaf, and an annotation claiming the full requested set would

@@ -6095,7 +6095,7 @@ object OpsQueries {
     * further Spark jobs, and ONE manifest commit embeds them all.
     */
   def io59ManifestStats(s: SparkSession, dir: String): DataFrame = {
-    import graft.io.{Manifest, SkipStats}
+    import graft.io.{GraftPar, Manifest, SkipStats}
     s.conf.set("spark.sql.catalog.g59", "graft.io.dsv2.GraftCatalog")
     s.conf.set("spark.sql.catalog.g59.root", tmpDir(s))
     val root = tmpDir(s) + "/graft_io59_tbl"
@@ -6124,28 +6124,17 @@ object OpsQueries {
         max(col("l_orderkey")).as("mx"))
       .collect().sortBy(_.getInt(0))
     // the 256 sidecar installs are independent one-file driver IOs —
-    // write them from a bounded pool instead of serially (the serial
-    // loop was a measurable slice of this gate's driver gap)
-    val dirBodies = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(pool)
-      try {
-        val futs = bucketStats.map { r => Future {
-          val d = f"$stage/pb=${r.getInt(0)}%03d"
-          val body = SkipStats.render(r.getLong(1),
-            Seq("l_orderkey" -> SkipStats.ColStats("long",
-              Some((r.getLong(2).toString, r.getLong(3).toString)))),
-            Map("l_orderkey" -> r.getLong(1)))
-          SkipStats.installRendered(s, d, body)
-          (d, body)
-        }}
-        futs.map(f =>
-          scala.util.Try(Await.result(f, Duration.Inf))).map(_.get).toSeq
-      } finally pool.shutdown()
-    }
+    // write them concurrently instead of serially (the serial loop was
+    // a measurable slice of this gate's driver gap)
+    val dirBodies = GraftPar.all(bucketStats.toSeq.map { r => () =>
+      val d = f"$stage/pb=${r.getInt(0)}%03d"
+      val body = SkipStats.render(r.getLong(1),
+        Seq("l_orderkey" -> SkipStats.ColStats("long",
+          Some((r.getLong(2).toString, r.getLong(3).toString)))),
+        Map("l_orderkey" -> r.getLong(1)))
+      SkipStats.installRendered(s, d, body)
+      (d, body)
+    })
     val dirs = dirBodies.map(_._1)
     val n = dirs.size
     require(n >= 64, s"fixture needs many buckets, got $n")

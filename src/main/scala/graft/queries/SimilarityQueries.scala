@@ -1829,7 +1829,7 @@ object SimilarityQueries {
     * from the original first block, census over survivors only.
     */
   def s16AnnTakedown(s: SparkSession, dir: String): DataFrame = {
-    import graft.io.{Catalog, Manifest, MergeOnRead}
+    import graft.io.{Catalog, GraftPar, Manifest, MergeOnRead}
     graft.expressions.LongArrayOps.register(s)
     val base = s.conf.get("spark.graft.tmpDir",
       System.getProperty("java.io.tmpdir"))
@@ -1853,10 +1853,10 @@ object SimilarityQueries {
       Manifest.commitWithStats(s, lRoot, s"$idx/l_$tag", Seq("vec_id"))
     }
     // concurrent loaders against one index — the manifest commit loop
-    // absorbs the append race (see [[GraftPar]])
-    GraftPar.par(
-      ingest(e.filter(col("vec_id") % 2 === 0), "a"),
-      ingest(e.filter(col("vec_id") % 2 === 1), "b"))
+    // absorbs the append race
+    GraftPar.all(Seq(
+      () => ingest(e.filter(col("vec_id") % 2 === 0), "a"),
+      () => ingest(e.filter(col("vec_id") % 2 === 1), "b")))
     // concurrent loaders never pin mid-race; fan-in is the publish
     Catalog.pinLatest(s, cRoot, Seq(lRoot, qRoot))
     val pre = Manifest.entries(s, lRoot)

@@ -1662,7 +1662,7 @@ object TextQueries {
     * three-table index.
     */
   def tBm25Takedown(s: SparkSession, dir: String): DataFrame = {
-    import graft.io.{Catalog, Manifest, MergeOnRead}
+    import graft.io.{Catalog, GraftPar, Manifest, MergeOnRead}
     val base = s.conf.get("spark.graft.tmpDir",
       System.getProperty("java.io.tmpdir"))
     val idx = base + "/graft_t27_bm25"
@@ -1697,9 +1697,9 @@ object TextQueries {
     // racing writers are exactly what Manifest's commit loop absorbs
     // (each re-reads and retries on a lost create race), and a real
     // ingest tier runs many loaders against the same index
-    GraftPar.par(
-      ingest(docs.filter(col("doc_id") % 2 === 0), "a"),
-      ingest(docs.filter(col("doc_id") % 2 === 1), "b"))
+    GraftPar.all(Seq(
+      () => ingest(docs.filter(col("doc_id") % 2 === 0), "a"),
+      () => ingest(docs.filter(col("doc_id") % 2 === 1), "b")))
     // concurrent loaders never pin mid-race (a pin taken while a peer
     // sits between its table commits would capture a torn vector); the
     // fan-in point is the publish point
@@ -1723,11 +1723,11 @@ object TextQueries {
     Manifest.commit(s, sRoot, s"$idx/s_takedown")
     // the two derived tables are independent manifest roots: tombstone
     // (and later fold) them concurrently
-    GraftPar.par(
-      MergeOnRead.deleteKeys(s, pRoot, "doc_id", victims,
+    GraftPar.all(Seq(
+      () => MergeOnRead.deleteKeys(s, pRoot, "doc_id", victims,
         idx + "/stage-p"),
-      MergeOnRead.deleteKeys(s, dRoot, "doc_id", victims,
-        idx + "/stage-d"))
+      () => MergeOnRead.deleteKeys(s, dRoot, "doc_id", victims,
+        idx + "/stage-d")))
     victims.unpersist()
     require(Manifest.entries(s, pRoot).startsWith(preP),
       "a takedown must append tombstones, never rewrite the index")
@@ -1749,9 +1749,9 @@ object TextQueries {
             xxhash64(col("doc_id"), col("dl")), lit(HashMod))).as("dh")))
         .collect().toSeq
     val deferred = tableCensus()
-    GraftPar.par(
-      MergeOnRead.fold(s, pRoot, "doc_id", idx + "/stage-p"),
-      MergeOnRead.fold(s, dRoot, "doc_id", idx + "/stage-d"))
+    GraftPar.all(Seq(
+      () => MergeOnRead.fold(s, pRoot, "doc_id", idx + "/stage-p"),
+      () => MergeOnRead.fold(s, dRoot, "doc_id", idx + "/stage-d")))
     require(tableCensus() == deferred,
       "folding the tombstones must not change what readers see")
     // the maintenance fold is the third atomic publish

@@ -46,10 +46,27 @@ object KlioPipeline {
       case other => sys.error(s"unsupported event output type: $other")
     }
 
-  private def listing(spark: SparkSession, io: KlioIoConfig)
-      : Option[DataFrame] =
-    if (io.skipExistenceCheck || io.location.isEmpty) None
-    else Some(Prelude.listingFor(spark, io.location, io.fileSuffix))
+  /** The configured standard prelude: the existence listings of the
+    * first data input and output (none when the check is skipped or the
+    * location unset) and their force/ping defaults, derived from `cfg`
+    * here and nowhere else. The listings are taken NOW, once; every
+    * event input the returned function routes shares them — a caller
+    * that must see fresh listings (a streaming micro-batch) calls this
+    * again.
+    */
+  def prelude(spark: SparkSession, cfg: KlioConfig,
+      now: Column = current_timestamp()): DataFrame => Prelude.Routed = {
+    def listing(io: KlioIoConfig): Option[DataFrame] =
+      if (io.skipExistenceCheck || io.location.isEmpty) None
+      else Some(Prelude.listingFor(spark, io.location, io.fileSuffix))
+    val data = cfg.jobConfig.data
+    val dataIn = data.inputs.headOption.flatMap(listing)
+    val dataOut = data.outputs.headOption.flatMap(listing)
+    val forceDefault = data.outputs.headOption.exists(_.force)
+    val pingDefault = data.inputs.headOption.exists(_.ping)
+    msgs => Prelude.standard(msgs, cfg.jobRef, dataIn, dataOut,
+      forceDefault, pingDefault, now)
+  }
 
   /** Multi-event-input fan-in (reference `run.py:458-508`): one prelude
     * chain PER event input, then the user function receives the named map
@@ -62,12 +79,7 @@ object KlioPipeline {
   def runMulti(spark: SparkSession, cfg: KlioConfig,
       userFn: Map[String, DataFrame] => DataFrame,
       now: Column = current_timestamp()): RunSummary = {
-    val dataIn = cfg.jobConfig.data.inputs.headOption
-      .flatMap(listing(spark, _))
-    val dataOut = cfg.jobConfig.data.outputs.headOption
-      .flatMap(listing(spark, _))
-    val forceDefault = cfg.jobConfig.data.outputs.headOption.exists(_.force)
-    val pingDefault = cfg.jobConfig.data.inputs.headOption.exists(_.ping)
+    val route = prelude(spark, cfg, now)
     val locations = cfg.jobConfig.events.inputs.map(_.location)
     require(locations.distinct.length == locations.length,
       s"duplicate event input locations: $locations — inputs are named by " +
@@ -75,8 +87,7 @@ object KlioPipeline {
     val inputsCached = cfg.jobConfig.events.inputs.map(io =>
       io.location -> readEventInput(spark, cfg, io).cache())
     val routedPerInput = inputsCached.map { case (loc, msgs) =>
-      loc -> Prelude.standard(msgs, cfg.jobRef, dataIn, dataOut,
-        forceDefault, pingDefault, now)
+      loc -> route(msgs)
     }
     require(routedPerInput.nonEmpty, "at least one event input required")
     // cached: the user transform must run once, not once per consumer
@@ -110,16 +121,7 @@ object KlioPipeline {
     require(inputs.nonEmpty, "at least one event input required")
     val messages = inputs.reduce(_ unionByName _).cache()
 
-    val dataIn = cfg.jobConfig.data.inputs.headOption
-      .flatMap(listing(spark, _))
-    val dataOut = cfg.jobConfig.data.outputs.headOption
-      .flatMap(listing(spark, _))
-    val forceDefault = cfg.jobConfig.data.outputs.headOption
-      .exists(_.force)
-    val pingDefault = cfg.jobConfig.data.inputs.headOption.exists(_.ping)
-
-    val routed = Prelude.standard(messages, cfg.jobRef, dataIn, dataOut,
-      forceDefault, pingDefault, now)
+    val routed = prelude(spark, cfg, now)(messages)
 
     // cached: the user transform (typically heavy media work, possibly
     // retried/timed-out per element) must execute exactly once per message

@@ -6,8 +6,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 
 import graft.config.KlioConfig
-import graft.model.{KlioJobRef, KlioWire}
-import graft.operators.Prelude
+import graft.model.KlioWire
+import graft.runner.KlioPipeline
 
 /** Streaming mode — the reference's default (`pipeline_options.streaming:
   * True`, config/core.py:361): Pub/Sub in → prelude → transforms → Pub/Sub
@@ -25,10 +25,11 @@ import graft.operators.Prelude
   *  - event time from a message attribute (io.py:682-689) → a real
   *    event-time column with watermarking.
   *
-  * The prelude operators are the SAME code as batch ([[Prelude]]) — filters
-  * and stream-static joins are streaming-legal, so the whole routing layer
-  * is mode-agnostic. That is the Spark-native answer to klio keeping two
-  * run modes behind one YAML flag.
+  * The prelude operators are the SAME code as batch
+  * ([[KlioPipeline.prelude]]) — filters and stream-static joins are
+  * streaming-legal, so the whole routing layer is mode-agnostic. That
+  * is the Spark-native answer to klio keeping two run modes behind one
+  * YAML flag.
   */
 object StreamingPipeline {
 
@@ -64,7 +65,6 @@ object StreamingPipeline {
       transform: DataFrame => DataFrame): DataStreamWriter[Row] = {
     val stream = readEvents(spark, inputDir,
       cfg.jobConfig.allowNonKlioMessages)
-    val job = cfg.jobRef
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime("1 second"))
@@ -74,17 +74,7 @@ object StreamingPipeline {
         // once, not once per action
         batch.persist()
         try {
-          val s = batch.sparkSession
-          val dataIn = cfg.jobConfig.data.inputs.headOption
-            .filterNot(io => io.skipExistenceCheck || io.location.isEmpty)
-            .map(io => Prelude.listingFor(s, io.location, io.fileSuffix))
-          val dataOut = cfg.jobConfig.data.outputs.headOption
-            .filterNot(io => io.skipExistenceCheck || io.location.isEmpty)
-            .map(io => Prelude.listingFor(s, io.location, io.fileSuffix))
-          val routed = Prelude.standard(batch, job, dataIn, dataOut,
-            forceDefault =
-              cfg.jobConfig.data.outputs.headOption.exists(_.force),
-            pingDefault = cfg.jobConfig.data.inputs.headOption.exists(_.ping))
+          val routed = KlioPipeline.prelude(batch.sparkSession, cfg)(batch)
           val out = transform(routed.process).unionByName(routed.passThru)
           KlioWire.encode(out).write.mode("append").text(outputDir)
           // drops never vanish silently (reference logs every one,

@@ -22,9 +22,10 @@ class BloomSidecarSpec extends AnyFunSuite {
       "match Spark's utf8 put") {
     import spark.implicits._
     val dir = tmp() + "/d0"
-    (0L until 5000L).map(i => (i * 3, s"key-${i * 3}"))
-      .toDF("id", "name").write.parquet(dir)
-    BloomSidecar.write(spark, dir, Seq("id", "name"))
+    (0L until 5000L)
+      .map(i => (i * 3, s"key-${i * 3}", Option.empty[String]))
+      .toDF("id", "name", "unset").write.parquet(dir)
+    BloomSidecar.write(spark, dir, Seq("id", "name", "unset"))
     val f = new Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val m = BloomSidecar.read(f, dir).get
@@ -42,6 +43,10 @@ class BloomSidecarSpec extends AnyFunSuite {
     assert(falsePos < 250, s"fpp blew past any plausible bound: $falsePos")
     // unparseable probe on a long column keeps (never a wrong skip)
     assert(BloomSidecar.mightContain(idT, idB, "not-a-number"))
+    // a column with no non-null value gets an empty filter: no equality
+    // probe can match it
+    val (unT, unB) = m("unset")
+    assert(!BloomSidecar.mightContain(unT, unB, "key-3"))
   }
 
   test("a corrupt sidecar reads as None — the directory stays kept") {
