@@ -32,8 +32,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * as their UTF-8 bytes), so consults below use the matching
   * `mightContainLong`/`mightContainString`. Written BEFORE the commit
   * like every sidecar (a committed directory always has its blooms; a
-  * crash leaves an orphan); carried through maintenance by
-  * [[carry]], exactly like the min/max discipline.
+  * crash leaves an orphan); [[Landing]] chooses the columns and
+  * carries them through maintenance, exactly like the min/max ones.
   */
 object BloomSidecar {
 
@@ -231,16 +231,5 @@ object BloomSidecar {
     case "long" => rendered.toLongOption.forall(bf.mightContainLong)
     case "string" => bf.mightContainString(rendered)
     case _ => true
-  }
-
-  /** Carry the bloom discipline through maintenance: a rewritten
-    * directory gets fresh blooms over the same columns its source
-    * carried (the [[SkipStats.carry]] rule). A source without a
-    * sidecar is a no-op.
-    */
-  def carry(s: SparkSession, fromDir: String, toDir: String): Unit = {
-    val f = new Path(fromDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    read(f, fromDir).foreach(m => write(s, toDir, m.keys.toSeq.sorted))
   }
 }

@@ -52,9 +52,9 @@ object Constraints {
   }
 
   /** Stage `df` at `batchDir`, validate the staged parquet against the
-    * constraints, and only then commit it into the table (with
-    * [[SkipStats]] sidecars when `statsCols` is non-empty). On
-    * violation the staged directory is deleted and a
+    * constraints, and only then commit it into the table (through
+    * [[Landing.prepare]], with `statsCols` as its explicit stats
+    * columns). On violation the staged directory is deleted and a
     * [[ConstraintViolationException]] raises — the table's manifest is
     * untouched, so the failed ingest is invisible to every reader.
     * Returns the committed version.
@@ -64,17 +64,11 @@ object Constraints {
       statsCols: Seq[String] = Nil,
       committer: Committer = FsCreateCommitter): Int = {
     df.write.mode("overwrite").parquet(batchDir)
-    val staged = SchemaMemo.read(s, Seq(batchDir))
-    val violations = check(staged, constraints)
-    if (violations.nonEmpty) {
-      val p = new org.apache.hadoop.fs.Path(batchDir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      throw new ConstraintViolationException(violations)
-    }
+    enforceStaged(s, batchDir, constraints)
+    Landing.prepare(s, Landing.plan(s, root, statsCols), batchDir)
     // commitIfAbsent: a retried ingest whose predecessor crashed after
     // this directory's commit must not append it twice (the staged
     // overwrite above already absorbed a crash BEFORE the commit)
-    if (statsCols.nonEmpty) SkipStats.write(s, batchDir, statsCols)
     Manifest.commitIfAbsent(s, root, batchDir, committer)
   }
 
@@ -116,15 +110,18 @@ object Constraints {
     staged.filter(col("violation").isNull).drop("violation")
       .write.mode("overwrite").parquet(batchDir)
     val nBad = staged.filter(col("violation").isNotNull).count()
+    if (nBad > 0) staged.filter(col("violation").isNotNull)
+      .write.mode("overwrite").parquet(quarantineDir)
+    // both directories land before either commits, so a table's own
+    // declared constraints refuse the ingest with neither table changed
+    Landing.prepare(s, Landing.plan(s, root), batchDir)
+    if (nBad > 0)
+      Landing.prepare(s, Landing.plan(s, quarantineRoot), quarantineDir)
     // both commits idempotent per directory: an at-least-once retry of
     // the whole ingest re-overwrites the same dirs and re-commits as
     // no-ops — no duplicated rows in either table
-    val qv = if (nBad > 0) {
-      staged.filter(col("violation").isNotNull)
-        .write.mode("overwrite").parquet(quarantineDir)
-      Some(Manifest.commitIfAbsent(s, quarantineRoot, quarantineDir,
-        committer))
-    } else None
+    val qv = if (nBad > 0) Some(Manifest.commitIfAbsent(s,
+      quarantineRoot, quarantineDir, committer)) else None
     val v = Manifest.commitIfAbsent(s, root, batchDir, committer)
     val sp = new org.apache.hadoop.fs.Path(stagingDir)
     sp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(sp, true)
@@ -136,35 +133,35 @@ object Constraints {
   // ONCE via `CALL lake.constrain(t, name, expr)` or `ALTER TABLE t
   // SET TBLPROPERTIES('constraint.<name>' = '<expr>')`, stored in the
   // `_table_props` sidecar as `constraint.<name> = <SQL expression>`,
-  // and checked by the DSv2 write, the V1 bridge, the partitioned
-  // insert, and CTAS — the writer never has to opt in, which is the
-  // entire point of a constraint. ──
+  // and checked by [[Landing]], the step every new data directory
+  // passes before its commit — the writer never has to opt in, which
+  // is the entire point of a constraint. ──
 
   val PropPrefix = "constraint."
 
-  /** The table's declared constraints, as (name, predicate) in
-    * declaration (name) order. Expressions are parsed fresh per call —
-    * they are tiny, and staleness bugs from caching across ALTERs
-    * would be silent.
+  /** The constraints declared in a table's properties, as (name,
+    * predicate) in declaration (name) order. Expressions are parsed
+    * fresh per operation — they are tiny, and staleness bugs from
+    * caching across ALTERs would be silent.
     */
-  def declared(s: SparkSession, root: String): Seq[(String, Column)] =
-    graft.io.dsv2.GraftTableProps.read(s, root).toSeq.collect {
+  def declared(props: Map[String, String]): Seq[(String, Column)] =
+    props.toSeq.collect {
       case (k, v) if k.startsWith(PropPrefix) =>
         k.stripPrefix(PropPrefix) -> org.apache.spark.sql.functions
           .expr(v)
     }.sortBy(_._1)
 
-  /** Validate an already-staged directory against the table's declared
-    * constraints: re-reads the staged parquet (column pruning means
-    * the pass scans only the constraint columns), and on violation
-    * DELETES the staged directory and raises — the manifest is never
-    * touched, so a bad batch is invisible to every reader. `colMap`
-    * renames physical→logical first on column-mapped tables (the
-    * declared expressions speak logical names).
+  /** Validate an already-staged directory against `cs`: re-reads the
+    * staged parquet (column pruning means the pass scans only the
+    * constraint columns), and on violation DELETES the staged directory
+    * and raises — the manifest is never touched, so a bad batch is
+    * invisible to every reader. `colMap` renames physical→logical first
+    * on column-mapped tables (the declared expressions speak logical
+    * names).
     */
-  def enforceStaged(s: SparkSession, root: String, dir: String,
+  def enforceStaged(s: SparkSession, dir: String,
+      cs: Seq[(String, Column)],
       colMap: Map[String, String] = Map.empty): Unit = {
-    val cs = declared(s, root)
     if (cs.isEmpty) return
     val staged = colMap.foldLeft(SchemaMemo.read(s, Seq(dir))) {
       case (df, (p, l)) => df.withColumnRenamed(p, l)

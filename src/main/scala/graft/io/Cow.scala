@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
   * [[MergeOnRead.fold]] and [[Merge.upsert]]: find the directories whose
   * rows a marker touches (one scan, parent derived from the scan's
   * `_metadata.file_path` — `input_file_name` cannot cross a join),
-  * partition hit/carried, and rewrite each hit through a transform while
-  * [[SkipStats.carry]]ing its sidecar. One implementation so a fix to
-  * the path mapping or the stats discipline lands in every mutation at
-  * once.
+  * partition hit/carried, and rewrite each hit through a transform into
+  * a directory [[Landing.prepare]]d with its source's sidecar columns.
+  * One implementation so a fix to the path mapping lands in every
+  * mutation at once.
   */
 private[io] object Cow {
 
@@ -36,8 +36,9 @@ private[io] object Cow {
   }
 
   /** Rewrite every hit directory through `xform` into
-    * `stagingDir/prefix-vV-N`, carrying skip-stats sidecars so
-    * maintenance never costs a table its scan planning. Returns the
+    * `stagingDir/prefix-vV-N`, landed under `plan` carrying the hit's
+    * own sidecar columns, so maintenance never costs a table its scan
+    * planning. Returns the
     * replacements in hit order. The per-directory rewrites are
     * independent jobs over disjoint inputs and outputs, so they run
     * through [[GraftPar.all]] instead of back to back.
@@ -57,15 +58,14 @@ private[io] object Cow {
     * overwrites them, and [[Manifest.sweepAllOrphans]] over the staging
     * root deletes them without touching a committed directory.
     */
-  def rewrite(s: SparkSession, hit: Seq[String], stagingDir: String,
-      prefix: String, baseVersion: Int,
+  def rewrite(s: SparkSession, plan: Landing.Plan, hit: Seq[String],
+      stagingDir: String, prefix: String, baseVersion: Int,
       xform: DataFrame => DataFrame): Seq[String] =
     GraftPar.all(hit.zipWithIndex.map { case (d, i) => () =>
       val outd = s"$stagingDir/$prefix-v$baseVersion-$i"
       xform(SchemaMemo.read(s, Seq(d)))
         .write.mode("overwrite").parquet(outd)
-      SkipStats.carry(s, d, outd)
-      BloomSidecar.carry(s, d, outd)
+      Landing.prepare(s, plan.carrying(s, Seq(d)), outd)
       outd
     })
 }

@@ -29,18 +29,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object IndexCompaction {
 
   /** Rewrite the current snapshot of `root` into `dest` (~targetBytes
-    * files), optionally emit a fresh skip-stats sidecar over
-    * `statsCols` (recomputed from the rewritten rows — the
-    * [[SkipStats]] discipline that stats travel with the data they
-    * describe), and commit `dest` as a REPLACING manifest version.
-    * Returns the new version number.
+    * files), land it through [[Landing.prepare]] (`statsCols` are its
+    * explicit stats columns) and commit `dest` as a REPLACING manifest
+    * version. Returns the new version number.
     */
   def compact(s: SparkSession, root: String, dest: String,
       targetBytes: Long = 64L * 1024 * 1024,
       statsCols: Seq[String] = Nil): Int = {
-    Compaction.compactAll(s, Manifest.committed(s, root), dest,
-      targetBytes)
-    if (statsCols.nonEmpty) SkipStats.write(s, dest, statsCols)
+    val entries = Manifest.committed(s, root)
+    Compaction.compactAll(s, entries, dest, targetBytes)
+    Landing.prepare(s, Landing.plan(s, root, statsCols)
+      .carrying(s, entries), dest)
     Manifest.rewrite(s, root, Seq(dest), op = "compact")
   }
 
@@ -56,9 +55,8 @@ object IndexCompaction {
     * runs — compact yesterday's partition, never the table: work ∝
     * the scoped slice, commit metadata ∝ 1.
     *
-    * The rewritten directory CARRIES the candidates' pruning
-    * discipline (union of their sidecar stats columns, plus
-    * `statsCols`; bloom coverage likewise) — maintenance must never
+    * The rewritten directory lands through [[Landing.prepare]], so it
+    * carries the candidates' sidecar columns — maintenance must never
     * leave an unprunable hole. Returns None (nothing committed) when
     * fewer than two candidate directories match (nothing to gain — a
     * single directory is already compact at this granularity).
@@ -84,14 +82,8 @@ object IndexCompaction {
     // through the rewrite (the cluster rule), not a random footer's
     SchemaMemo.readMerged(s, candidates)
       .repartition(n).write.mode("overwrite").parquet(dest)
-    val carried = candidates.flatMap(d => SkipStats.read(f, d))
-      .flatMap(_.keySet).toSet
-    val cols = (carried ++ statsCols).toSeq.sorted
-    if (cols.nonEmpty) SkipStats.write(s, dest, cols)
-    val bloomCarried = candidates
-      .flatMap(d => BloomSidecar.readKeys(f, d)).flatten.toSet
-    if (bloomCarried.nonEmpty)
-      BloomSidecar.write(s, dest, bloomCarried.toSeq.sorted)
+    Landing.prepare(s, Landing.plan(s, root, statsCols)
+      .carrying(s, candidates), dest)
     Some(Manifest.replaceDirs(s, root, candidates.toSet, Seq(dest),
       op = "compact"))
   }
@@ -108,6 +100,8 @@ object IndexCompaction {
       agg: DataFrame => DataFrame): Int = {
     agg(Manifest.snapshot(s, root)).coalesce(1)
       .write.mode("overwrite").parquet(dest)
+    Landing.prepare(s, Landing.plan(s, root)
+      .carrying(s, Manifest.committed(s, root)), dest)
     Manifest.rewrite(s, root, Seq(dest))
   }
 }

@@ -606,11 +606,13 @@ object Manifest {
     }
   }
 
-  /** Appending commit that emits the directory's [[SkipStats]] sidecar
-    * FIRST — the ingest-time discipline that keeps a table built by
-    * streaming (st8's foreachBatch) or by incremental index commits
-    * (t25 postings, s14 IVF lists) prunable from its very first batch,
-    * instead of unprunable until some later maintenance pass. Sidecar
+  /** Appending commit that lands the directory through
+    * [[Landing.prepare]] FIRST, with `statsCols` as its explicit
+    * [[SkipStats]] columns — the ingest-time discipline that keeps a
+    * table built by streaming (st8's foreachBatch) or by incremental
+    * index commits (t25 postings, s14 IVF lists) prunable from its very
+    * first batch, instead of unprunable until some later maintenance
+    * pass. Sidecar
     * before manifest: a committed directory therefore always has its
     * stats; a crash in between leaves an uncommitted orphan whose
     * sidecar dies with it, exactly like its data.
@@ -618,7 +620,7 @@ object Manifest {
   def commitWithStats(s: SparkSession, root: String, batchDir: String,
       statsCols: Seq[String],
       committer: Committer = FsCreateCommitter): Int = {
-    SkipStats.write(s, batchDir, statsCols)
+    Landing.prepare(s, Landing.plan(s, root, statsCols), batchDir)
     commit(s, root, batchDir, committer)
   }
 

@@ -1,6 +1,5 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -52,7 +51,8 @@ object Merge {
       df.join(broadcast(keys), Seq(keyCol), "left_anti")
     val (hit, carried) = Cow.split(s, dirs,
       _.join(broadcast(keys), Seq(keyCol), "left_semi"))
-    val rewritten = Cow.rewrite(s, hit, stagingDir, "merge", baseV,
+    val plan = Landing.plan(s, root)
+    val rewritten = Cow.rewrite(s, plan, hit, stagingDir, "merge", baseV,
       minusKeys)
     // a live tombstone over an upserted key would mask the incoming row
     // (MergeOnRead masking is by key, table-wide) — the upsert IS the
@@ -76,21 +76,11 @@ object Merge {
     }
     val upsertDir = s"$stagingDir/merge-upsert-v$baseV"
     source.write.mode("overwrite").parquet(upsertDir)
-    // the appended source inherits the table's stats discipline: if any
-    // directory tracks skip-stats, the new one tracks the same columns —
-    // restricted to columns the SOURCE actually has at a stats-capable
-    // type. The source schema is the caller's, not the table's: a carry
-    // that throws here would abort the upsert AFTER the rewrites were
-    // staged, stranding orphan output mid-protocol; a directory with a
-    // partial (or no) sidecar is merely conservatively unprunable.
-    val f = new Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val srcTypes = source.schema.map(sf => sf.name -> sf.dataType).toMap
-    dirs.iterator.map(d => SkipStats.read(f, d)).collectFirst {
-      case Some(m) => m.keys.toSeq.sorted.filter(c =>
-        srcTypes.get(c).exists(SkipStats.supportedType))
-    }.filter(_.nonEmpty)
-      .foreach(cols => SkipStats.write(s, upsertDir, cols))
+    // the appended source inherits the table's pruning discipline: the
+    // union of every data directory's sidecar columns, cut down by
+    // Landing to the columns the SOURCE has at a supported type (the
+    // source schema is the caller's, not the table's)
+    Landing.prepare(s, plan.carrying(s, dirs), upsertDir)
     val v = Manifest.rewrite(s, root,
       carried ++ tombCarried ++ newTombs ++ rewritten :+ upsertDir,
       committer)

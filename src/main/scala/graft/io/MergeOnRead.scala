@@ -347,7 +347,7 @@ object MergeOnRead {
       f.delete(new Path(insDir), true)
       return None
     }
-    if (statsCols.nonEmpty) SkipStats.write(s, insDir, statsCols)
+    Landing.prepare(s, Landing.plan(s, root, statsCols), insDir)
     // conflict-detecting commit: a racer that landed a same-or-higher
     // epoch over OVERLAPPING keys refuses (both morins copies of a
     // shared key would stay visible — silent duplication); disjoint-key
@@ -369,6 +369,7 @@ object MergeOnRead {
     val baseV = Manifest.versions(s, root).last
     val (tombs, data) = Manifest.entries(s, root).partition(isTombstone)
     if (tombs.isEmpty) return None
+    val plan = Landing.plan(s, root)
     val scoped = tombs.filter(tombEpoch(_).isDefined)
     // same cap discipline as the read path: a fold running precisely
     // BECAUSE tombstones piled up must not be the thing that trips the
@@ -377,7 +378,7 @@ object MergeOnRead {
       val keys = keySet(s, tombs, keyCol)
       val (hit, carried) = Cow.split(s, data,
         _.join(keys, Seq(keyCol), "left_semi"))
-      val rewritten = Cow.rewrite(s, hit, stagingDir, "fold", baseV,
+      val rewritten = Cow.rewrite(s, plan, hit, stagingDir, "fold", baseV,
         _.join(keys, Seq(keyCol), "left_anti"))
       // op marker: a fold REWRITES the physical layout but preserves
       // the MERGED view exactly (it applies tombstones the read path
@@ -399,7 +400,7 @@ object MergeOnRead {
           val keys = keySet(s, applicable, keyCol)
           val (hit, carried) = Cow.split(s, dirs,
             _.join(keys, Seq(keyCol), "left_semi"))
-          val rewritten = Cow.rewrite(s, hit, stagingDir,
+          val rewritten = Cow.rewrite(s, plan, hit, stagingDir,
             s"fold-e$de", baseV,
             _.join(keys, Seq(keyCol), "left_anti"))
           (carried, rewritten)

@@ -55,7 +55,8 @@ object RowDelete {
     val (hit, carriedData) = Cow.split(s, dirs, _.filter(pred))
     val carried = carriedData ++ tombs
     if (hit.isEmpty) return Result(baseV, carried, Nil)
-    val rewritten = Cow.rewrite(s, hit, stagingDir, "cow", baseV,
+    val rewritten = Cow.rewrite(s, Landing.plan(s, root), hit,
+      stagingDir, "cow", baseV,
       _.filter(!coalesce(pred, lit(false))))
     val v = Manifest.rewrite(s, root, carried ++ rewritten, committer)
     Result(v, carried, rewritten)

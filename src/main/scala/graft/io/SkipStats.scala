@@ -24,8 +24,8 @@ import java.nio.charset.StandardCharsets
   * with the directory through commit, carry, vacuum, and time travel
   * with no extra protocol — and a directory without a sidecar (a fold
   * rewrite, a foreign writer) is conservatively KEPT by pruning, never
-  * wrongly skipped. Writers call [[write]] after landing a directory
-  * and before committing it; readers use [[scan]].
+  * wrongly skipped. [[Landing.prepare]] calls [[write]] after a
+  * directory lands and before it commits; readers use [[scan]].
   */
 object SkipStats {
 
@@ -73,10 +73,9 @@ object SkipStats {
   final case class Sidecar(count: Option[Long],
       cols: Option[Map[String, ColStats]], nonNull: Map[String, Long])
 
-  /** Whether a column of this type can carry skip-stats — for callers
-    * that must decide BEFORE staging work whether a carry is possible
-    * (e.g. [[Merge.upsert]] propagating the table's stats discipline
-    * onto a source whose schema it does not control).
+  /** Whether a column of this type can carry skip-stats — the filter
+    * [[Landing]] applies to every chosen column, and the check DDL
+    * runs on a partition column.
     */
   def supportedType(dt: DataType): Boolean = typeTag(dt).nonEmpty
 
@@ -210,20 +209,6 @@ object SkipStats {
     val out = f.create(new Path(dataDir, StatsFile), true)
     try out.write(body.getBytes(StandardCharsets.UTF_8))
     finally out.close()
-  }
-
-  /** Carry prunability through maintenance: if `fromDir` has a sidecar,
-    * compute fresh stats for the same columns over `toDir` (a rewrite
-    * of it). Row-level maintenance ([[RowDelete]], [[MergeOnRead.fold]],
-    * [[Merge.upsert]]) calls this on every rewritten directory so a
-    * stats-bearing table stays skippable after deletes compact in — a
-    * table shouldn't lose its scan-planning just because it was
-    * maintained. A `fromDir` without a sidecar is a no-op.
-    */
-  def carry(s: SparkSession, fromDir: String, toDir: String): Unit = {
-    val f = new Path(fromDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    read(f, fromDir).foreach(m => write(s, toDir, m.keys.toSeq.sorted))
   }
 
   /** The sidecar file's raw UTF-8 body, or None when absent — the ONE

@@ -1135,7 +1135,10 @@ case class GraftScan(delegate: org.apache.spark.sql.execution.datasources
     * The advertised set is the UNION of sidecar keys across kept
     * directories (a single fold-output dir without a sidecar must not
     * silence pruning for the rest), restricted to the types whose
-    * runtime literal rendering the sidecars can compare.
+    * runtime literal rendering the sidecars can compare and to the
+    * columns this scan outputs — Spark resolves every advertised name
+    * against the scan's output, and fails the query on one that column
+    * pruning removed.
     */
   // memoized: Spark probes filterAttributes once per candidate join
   // during planning — the sidecar sweep (manifest annotations, or at
@@ -1145,11 +1148,13 @@ case class GraftScan(delegate: org.apache.spark.sql.execution.datasources
       org.apache.spark.sql.connector.expressions.NamedReference] = {
     // sidecar keys are physical — advertise their LOGICAL names;
     // bloom-covered columns prune point probes even without ranges
+    val output = readSchema().fieldNames.toSet
     (keptDirs.iterator.flatMap(d => dirStats.cols(d))
         .flatMap(_.keySet) ++
       keptDirs.iterator.flatMap(d => dirStats.bloomKeys(d)))
       .toSet[String]
-      .map(p => colMap.getOrElse(p, p)).filter(runtimePrunable)
+      .map(p => colMap.getOrElse(p, p))
+      .filter(c => output(c) && runtimePrunable(c))
       .toArray.sorted.map(
         org.apache.spark.sql.connector.expressions.Expressions.column)
   }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.connector.write.{BatchWrite, LogicalWriteInfo,
   PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types.StructType
 
-import graft.io.{Manifest, SkipStats}
+import graft.io.{Landing, Manifest, SkipStats}
 
 /** SQL DDL support for [[GraftCatalog]] — table creation, CTAS staging,
   * and the persisted table-properties sidecar.
@@ -119,9 +119,7 @@ object GraftDdl {
   def writeEmptyDir(s: SparkSession, root: String,
       schema: StructType): String = {
     val dir = s"$root/data/w-" + java.util.UUID.randomUUID().toString
-    s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      .coalesce(1).write.parquet(dir)
+    Landing.schemaFile(s, dir, schema)
     dir
   }
 }
@@ -217,40 +215,28 @@ class GraftStagedTable(s: SparkSession, root: String,
 
   override def commitStagedChanges(): Unit = {
     GraftDdl.applyProperties(s, root, props)
+    // an all-filtered CTAS wrote no directory; Landing gives the fresh
+    // one a schema-bearing file
     val dir = writtenDir.getOrElse(
-      GraftDdl.writeEmptyDir(s, root, tableSchema))
-    // an all-filtered CTAS still needs a schema-bearing file
-    val f = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    val hasFiles = f.exists(new Path(dir)) && f.listStatus(new Path(dir))
-      .exists(_.getPath.getName.endsWith(".parquet"))
-    if (!hasFiles)
-      s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
-        .coalesce(1).write.mode("append").parquet(dir)
-    def cols(key: String): Seq[String] = props.get(key)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
-    val partitionCols = cols("partitioncols")
-    if (partitionCols.nonEmpty && hasFiles) {
+      s"$root/data/w-" + java.util.UUID.randomUUID().toString)
+    val landing = Landing.planFrom(props, Nil, Nil, Map.empty)
+    val partitionCols = Landing.csv(props.get("partitioncols"))
+    if (partitionCols.nonEmpty &&
+        graft.io.SchemaMemo.schemaOf(s, dir).nonEmpty) {
       // partitioned CTAS: split the staged result per partition value
       // and commit the leaves as the table's first (or replacing)
       // version — one extra pass over the CTAS result, once; the flat
       // staging dir stays an orphan for the sweep
       GraftPartitionedWrite.insert(s, root,
-        graft.io.SchemaMemo.read(s, Seq(dir)),
-        partitionCols, cols("statscols"), cols("bloomcols"),
+        graft.io.SchemaMemo.read(s, Seq(dir)), partitionCols, landing,
         replacing = replaceExisting)
       return
     }
-    val statsCols = cols("statscols")
-    if (statsCols.nonEmpty) SkipStats.write(s, dir, statsCols)
-    val bloomCols = cols("bloomcols")
-    if (bloomCols.nonEmpty) graft.io.BloomSidecar.write(s, dir, bloomCols)
     // CREATE TABLE ... TBLPROPERTIES('constraint.x' = ...) AS SELECT:
     // the CTAS result is the constraint's first subject — a violating
     // result aborts with nothing committed (props alone don't make a
     // table; the next CTAS overwrites them)
-    graft.io.Constraints.enforceStaged(s, root, dir)
+    Landing.prepare(s, landing, dir, Some(tableSchema))
     if (replaceExisting) Manifest.rewrite(s, root, Seq(dir))
     else Manifest.commit(s, root, dir)
   }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
   StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.io.{IndexCompaction, Manifest, MergeOnRead}
+import graft.io.{IndexCompaction, Landing, Manifest, MergeOnRead}
 
 /** SQL `CALL` procedures for manifest-table MAINTENANCE — the verbs
   * writes must not be (Iceberg's `CALL catalog.system.*` UX, on Spark
@@ -173,7 +173,8 @@ object GraftProcedures {
     // ── declared CHECK constraints (Delta ADD CONSTRAINT):
     // CALL lake.constrain(t, 'positive_cents', 'cents > 0') validates
     // the existing data then persists; every later write on every
-    // path enforces it (Constraints.enforceStaged) ──
+    // path enforces it (graft.io.Landing, the step every new data
+    // directory passes before its commit) ──
     "constrain" -> new P("constrain",
       Seq(param("table", StringType), param("name", StringType),
         param("expression", StringType)),
@@ -336,8 +337,7 @@ object GraftProcedures {
           .BooleanType)))) {
       override protected def run(in: InternalRow): Seq[InternalRow] = {
         val root = rootOf(utf(in.get(0, StringType)))
-        def cols(i: Int): Seq[String] = utf(in.get(i, StringType))
-          .split(",").map(_.trim).filter(_.nonEmpty).toSeq
+        def cols(i: Int) = Landing.csv(Some(utf(in.get(i, StringType))))
         require(cols(1).nonEmpty || cols(2).nonEmpty,
           "sidecar needs stats_cols and/or bloom_cols")
         val s = session
@@ -354,10 +354,10 @@ object GraftProcedures {
           .map { d =>
             val wroteStats = statsCols.nonEmpty &&
               graft.io.SkipStats.read(f, d).isEmpty
-            if (wroteStats) graft.io.SkipStats.write(s, d, statsCols)
             val wroteBloom = bloomCols.nonEmpty &&
               graft.io.BloomSidecar.read(f, d).isEmpty
-            if (wroteBloom) graft.io.BloomSidecar.write(s, d, bloomCols)
+            Landing.sidecars(s, d, (if (wroteStats) statsCols else Nil,
+              if (wroteBloom) bloomCols else Nil))
             new GenericInternalRow(Array[Any](UTF8String.fromString(d),
               wroteStats, wroteBloom))
           }
@@ -633,29 +633,13 @@ object GraftProcedures {
           .map(_.getPath.toUri.getPath).sorted.toSeq
         require(newDirs.nonEmpty, "clustering produced no output")
         // the rewrite must not cost the table its existing pruning
-        // discipline: stats cover the sort columns PLUS the union of
-        // what the replaced directories carried and the persisted
-        // statsCols property; blooms likewise (the ADVICE-r12 carry
-        // rule — maintenance never leaves an unprunable hole)
-        val fsrc = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val carriedStats = data.flatMap(d =>
-          graft.io.SkipStats.read(fsrc, d)).flatMap(_.keySet).toSet
-        val propCols = GraftTableProps.read(s, root)
-        def propList(k: String): Set[String] = propCols.get(k)
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-          .getOrElse(Set.empty).map(c => l2p.getOrElse(c, c))
-        val statsCols =
-          (phys.toSet ++ carriedStats ++ propList("statsCols")).toSeq.sorted
-        val carriedBloom = data.flatMap(d =>
-          graft.io.BloomSidecar.readKeys(fsrc, d)).flatten.toSet
-        val bloomCols =
-          (carriedBloom ++ propList("bloomCols")).toSeq.sorted
-        newDirs.foreach { d =>
-          graft.io.SkipStats.write(s, d, statsCols)
-          if (bloomCols.nonEmpty) graft.io.BloomSidecar.write(s, d,
-            bloomCols)
-        }
+        // discipline: the sort columns are explicit stats columns, on
+        // top of the table's properties and what the replaced
+        // directories carried (maintenance never leaves an unprunable
+        // hole)
+        val landing = Landing.plan(s, root, sortCols,
+          colMap = l2p.map(_.swap)).carrying(s, data)
+        newDirs.foreach(Landing.prepare(s, landing, _))
         Manifest.replaceDirs(s, root, remove = data.toSet, add = newDirs,
           op = "cluster")
         newDirs.map { d =>

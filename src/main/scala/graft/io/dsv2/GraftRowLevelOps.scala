@@ -82,8 +82,7 @@ class GraftRowLevelBuilder(s: SparkSession, root: String, version: Int,
         // hide this update's re-inserted rows — those tables keep the
         // copy-on-write rewrite (which also folds them), the
         // documented pre-epoch behavior
-        tombDirs.forall(t => MergeOnRead.tombEpoch(t).isDefined) &&
-        s.conf.get("spark.graft.dml.morUpdate", "true").toBoolean)
+        tombDirs.forall(t => MergeOnRead.tombEpoch(t).isDefined))
       new GraftDeltaUpdate(s, root, version, tableSchema, dataDirs,
         tombDirs, morKey.get, colMap)
     else
@@ -320,17 +319,10 @@ class GraftDeltaUpdateWrite(s: SparkSession, root: String,
         if (keyIsString) msgs.flatMap(_.strings).toSeq.toDF(morKey)
         else msgs.flatMap(_.longs).toSeq.toDF(morKey)
       keys.distinct().write.parquet(tombDir)
-      // the update carries the table's pruning discipline onto its
-      // own directory (the DML carry rule — persisted properties)
-      val props = GraftTableProps.read(s, root)
-      def cols(k: String): Seq[String] = props.get(k)
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(Seq.empty)
-        .map(c => l2p.getOrElse(c, c))
-      if (cols("statscols").nonEmpty)
-        graft.io.SkipStats.write(s, insDir, cols("statscols"))
-      if (cols("bloomcols").nonEmpty)
-        graft.io.BloomSidecar.write(s, insDir, cols("bloomcols"))
+      // the rewritten rows land like any data directory (the tombstone
+      // beside them is a key list, not data)
+      graft.io.Landing.prepare(s, graft.io.Landing.plan(s, root,
+        colMap = colMap), insDir, Some(info.schema()))
       // conflict-detecting commit: the epoch was pinned at PLAN time,
       // so a concurrent UPDATE can land between this one's plan and
       // commit — the guard re-checks the fresh entry list inside the

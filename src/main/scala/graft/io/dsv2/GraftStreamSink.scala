@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.sources.StreamSinkProvider
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.io.{Manifest, SkipStats}
+import graft.io.{Landing, Manifest}
 
 /** `writeStream.format("graft")` — a manifest table as a streaming SINK:
   * every microbatch is ONE manifest commit, and exactly-once lands on
@@ -21,10 +21,10 @@ import graft.io.{Manifest, SkipStats}
   *
   * Append output mode only — a replacing mode would rewrite history
   * under downstream streams (exactly the double-count
-  * [[GraftMicroBatchStream]] refuses); `statsCols`/`bloomCols` —
-  * writer options, falling back to the table's persisted
-  * `TBLPROPERTIES` defaults — write sidecars per batch so the table
-  * is prunable from its first commit.
+  * [[GraftMicroBatchStream]] refuses). Each batch lands through
+  * [[Landing.prepare]] like a batch write: sidecars over the
+  * `statsCols`/`bloomCols` options plus the table's `TBLPROPERTIES`,
+  * and the declared CHECK constraints, which refuse a violating batch.
   * The re-written batch directory on replay is overwritten BEFORE the
   * absent-check, so a crash between data-write and commit leaves only
   * an orphan that the replay replaces.
@@ -35,19 +35,8 @@ class GraftStreamSink(parameters: Map[String, String]) extends Sink {
     throw new IllegalArgumentException(
       "graft sink requires a path (the manifest table root)"))
 
-  // writer options win; the table's persisted properties (CREATE TABLE
-  // TBLPROPERTIES / ALTER SET) are the defaults — a streamed ingest
-  // into a DDL-created table keeps its sidecar discipline without the
-  // query repeating the options (read per batch: the table may not
-  // exist before the first one)
-  private def cols(s: org.apache.spark.sql.SparkSession,
-      key: String): Seq[String] =
-    parameters.get(key.toLowerCase).orElse(parameters.get(key))
-      .orElse(scala.util.Try(
-        GraftTableProps.read(s, root).get(key.toLowerCase))
-        .toOption.flatten)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
+  private def opt(key: String): Seq[String] =
+    Landing.csv(parameters.get(key.toLowerCase).orElse(parameters.get(key)))
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val s = data.sparkSession
@@ -66,10 +55,10 @@ class GraftStreamSink(parameters: Map[String, String]) extends Sink {
     // batch frame to write (the file sink's own move)
     val out = org.apache.spark.sql.graftbridge.StreamingBatch.asBatch(data)
     out.write.mode("overwrite").parquet(dir)
-    val statsCols = cols(s, "statsCols")
-    if (statsCols.nonEmpty) SkipStats.write(s, dir, statsCols)
-    val bloomCols = cols(s, "bloomCols")
-    if (bloomCols.nonEmpty) graft.io.BloomSidecar.write(s, dir, bloomCols)
+    // properties are read per batch: the table may not exist before
+    // the first one
+    Landing.prepare(s, Landing.plan(s, root, opt("statsCols"),
+      opt("bloomCols")), dir)
     Manifest.commitIfAbsent(s, root, dir)
   }
 

@@ -13,7 +13,7 @@ import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType,
   StructType, UserDefinedType}
 
-import graft.io.{GraftPar, Manifest, MergeOnRead, SkipStats}
+import graft.io.{GraftPar, Landing, Manifest, SkipStats}
 
 /** WRITE paths for `format("graft")`.
   *
@@ -41,10 +41,10 @@ import graft.io.{GraftPar, Manifest, MergeOnRead, SkipStats}
   *                  refuses an existing one.
   *  - `ignore`    → no-op when the table exists.
   *
-  * Option `statsCols` (comma-separated) writes the [[SkipStats]] sidecar
-  * over the fresh directory before the commit, so skip-pruning works
-  * from the first version — the t25 ingest discipline, available to SQL
-  * users. The data directory is named `data/w{version-attempt}-{uuid}`:
+  * Options `statsCols`/`bloomCols` add sidecar columns to the table's
+  * own ([[Landing.prepare]]), so skip-pruning works from the first
+  * version — the t25 ingest discipline, available to SQL users. The
+  * data directory is named `data/w{version-attempt}-{uuid}`:
   * unique per write, so concurrent appenders race only on the manifest
   * commit (which is the protocol's job to arbitrate), never on files.
   */
@@ -58,22 +58,13 @@ trait GraftWriteSupport extends CreatableRelationProvider {
         "graft write requires a path (the manifest table root)"))
     val exists = scala.util.Try(Manifest.versions(s, root))
       .toOption.exists(_.nonEmpty)
-    def csvParam(k: String): Seq[String] = parameters.get(k.toLowerCase)
-      .orElse(parameters.get(k))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
-    val statsCols = csvParam("statsCols")
-    val bloomCols = csvParam("bloomCols")
+    def csvParam(k: String): Seq[String] =
+      Landing.csv(parameters.get(k.toLowerCase).orElse(parameters.get(k)))
     def writeAndCommit(replacing: Boolean): Unit = {
       val dir = s"$root/data/w-" + java.util.UUID.randomUUID().toString
       data.write.parquet(dir)
-      if (statsCols.nonEmpty) SkipStats.write(s, dir, statsCols)
-      if (bloomCols.nonEmpty)
-        graft.io.BloomSidecar.write(s, dir, bloomCols)
-      // declared CHECK constraints gate the V1 path too — a plain
-      // `df.write.format("graft")` producer gets the same enforcement
-      // as the catalog INSERT (violation deletes the stage and raises)
-      graft.io.Constraints.enforceStaged(s, root, dir)
+      Landing.prepare(s, Landing.plan(s, root, csvParam("statsCols"),
+        csvParam("bloomCols")), dir)
       if (replacing) Manifest.rewrite(s, root, Seq(dir))
       else Manifest.commit(s, root, dir)
     }
@@ -103,9 +94,9 @@ trait GraftWriteSupport extends CreatableRelationProvider {
   * the sweep), concurrent appenders race only on the manifest commit.
   *
   * Write options:
-  *  - `statsCols` — comma-separated; writes the [[SkipStats]] sidecar
-  *    over the fresh directory BEFORE the commit, so the new files are
-  *    prunable from the moment they are visible.
+  *  - `statsCols`/`bloomCols` — comma-separated sidecar columns added
+  *    to the table's own BEFORE the commit ([[Landing.prepare]]), so
+  *    the new files are prunable from the moment they are visible.
   *  - `sortBy` — comma-separated; advertised to Spark as the write's
   *    required distribution (range-partitioned) AND in-partition
   *    ordering via [[RequiresDistributionAndOrdering]], so rows land
@@ -126,19 +117,15 @@ class GraftWriteBuilder(s: SparkSession, root: String,
 
   override def build(): Write = {
     val props = GraftTableProps.read(s, root)
-    val pcols = props.get("partitioncols")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
+    val pcols = Landing.csv(props.get("partitioncols"))
     if (pcols.isEmpty) new GraftV2Write(s, root, info, replacing,
       colMap = colMap)
     else {
       // partitioned table: one dynamic partitioned write job straight
       // from the DataFrame via the DSv2→V1 write bridge
-      def csv(key: String): Seq[String] = Option(info.options.get(key))
-        .orElse(props.get(key.toLowerCase))
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(Seq.empty)
-      val (statsCols, bloomCols) = (csv("statsCols"), csv("bloomCols"))
+      def opt(key: String) = Landing.csv(Option(info.options.get(key)))
+      val landing = Landing.planFrom(props, opt("statsCols"),
+        opt("bloomCols"), colMap)
       val wasReplacing = replacing
       val l2p = colMap.map(_.swap)
       def phys(c: String) = l2p.getOrElse(c, c)
@@ -150,8 +137,8 @@ class GraftWriteBuilder(s: SparkSession, root: String,
               case (df, (p, l)) => df.withColumnRenamed(l, p)
             }
             GraftPartitionedWrite.insert(s, root, physData,
-              pcols.map(phys), statsCols.map(phys), bloomCols.map(phys),
-              replacing = wasReplacing || overwrite, colMap = colMap)
+              pcols.map(phys), landing,
+              replacing = wasReplacing || overwrite)
           }
         override def description(): String =
           s"GraftPartitionedWrite root=$root " +
@@ -185,19 +172,16 @@ class GraftV2Write(s: SparkSession, root: String,
           .CaseInsensitiveStringMap = logicalInfo.options
     }
 
-  // write options win; the table's persisted properties (CREATE TABLE
-  // TBLPROPERTIES, GraftTableProps) are the defaults — statsCols/sortBy
-  // declared once at creation govern every later INSERT
-  private lazy val tableProps = GraftTableProps.read(s, root)
+  // the table's persisted properties (CREATE TABLE TBLPROPERTIES,
+  // GraftTableProps), read once for the whole write: statsCols/sortBy
+  // declared once at creation govern every later INSERT; a write
+  // option adds sidecar columns and overrides sortBy
+  private def opt(key: String) = Option(info.options.get(key))
 
-  private def csv(key: String): Seq[String] =
-    Option(info.options.get(key))
-      .orElse(tableProps.get(key.toLowerCase))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
-
-  private val statsCols = csv("statsCols")
-  private val sortBy = csv("sortBy")
+  private val landing = Landing.plan(s, root,
+    Landing.csv(opt("statsCols")), Landing.csv(opt("bloomCols")), colMap)
+  private val sortBy =
+    Landing.csv(opt("sortBy").orElse(landing.props.get("sortby")))
 
   private val dir =
     s"$root/data/w-" + java.util.UUID.randomUUID().toString
@@ -228,7 +212,8 @@ class GraftV2Write(s: SparkSession, root: String,
 
   override def description(): String =
     s"GraftWrite root=$root dir=$dir replacing=$replacing " +
-      s"statsCols=${statsCols.mkString("+")} sortBy=${sortBy.mkString("+")}"
+      s"statsCols=${landing.stats.toSeq.sorted.mkString("+")} " +
+      s"sortBy=${sortBy.mkString("+")}"
 
   override def toBatch: BatchWrite = new BatchWrite {
     private val db = delegate.toBatch
@@ -249,33 +234,6 @@ class GraftV2Write(s: SparkSession, root: String,
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       db.commit(messages) // finalize task files into the fresh dir
-      // a DML rewrite CARRIES the table's pruning discipline: when the
-      // directories being replaced had skip-stats sidecars, the
-      // rewritten directory gets sidecars over the same columns — a
-      // takedown must not leave an unprunable hole in the layout
-      val cols =
-        if (statsCols.nonEmpty) statsCols
-        else if (!fromRowOp) Seq.empty
-        else {
-          // tombstone entries never carry sidecars — a MoR-table
-          // UPDATE/MERGE rewrite must judge coverage over DATA dirs
-          // only, or the carry silently drops for exactly that case
-          val replaced = opState.flatMap(_.replacedDirs).getOrElse(
-            scala.util.Try(Manifest.committed(s, root))
-              .getOrElse(Seq.empty))
-            .filterNot(MergeOnRead.isTombstone)
-          val f = new Path(root)
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
-          val sided = replaced.flatMap(d => SkipStats.read(f, d))
-          if (sided.size == replaced.size && sided.nonEmpty)
-            sided.map(_.keySet).reduce(_ intersect _).toSeq.sorted
-          else Seq.empty
-        }
-      val fDir = new Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val hasFiles = fDir.exists(new Path(dir)) &&
-        fDir.listStatus(new Path(dir))
-          .exists(_.getPath.getName.endsWith(".parquet"))
       // a CoW DML whose runtime group filter matched NOTHING is a
       // no-op: the filtered scan returned zero rows by construction
       // (zero kept partitions), so committing would append an empty
@@ -286,40 +244,14 @@ class GraftV2Write(s: SparkSession, root: String,
       // sweep, like an abort.
       if (fromRowOp &&
           opState.flatMap(_.replacedDirs).exists(_.isEmpty)) return
-      if (!hasFiles)
-        // a rewrite whose every input row was deleted still needs a
-        // schema-bearing file — the committed entry must stay readable
-        s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          info.schema()).coalesce(1).write.mode("append").parquet(dir)
-      // sidecar keys live in PHYSICAL-name space like the files
-      if (cols.nonEmpty && hasFiles)
-        SkipStats.write(s, dir, cols.map(physName))
-      // bloom sidecars ride the same option/property + DML-carry rules
-      val bloomCols = {
-        val opt = csv("bloomCols")
-        if (opt.nonEmpty || !fromRowOp) opt
-        else {
-          val replaced = opState.flatMap(_.replacedDirs).getOrElse(
-            scala.util.Try(Manifest.committed(s, root))
-              .getOrElse(Seq.empty))
-            .filterNot(MergeOnRead.isTombstone)
-          val f = new Path(root)
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
-          val sided = replaced.flatMap(d => graft.io.BloomSidecar.read(f, d))
-          if (sided.size == replaced.size && sided.nonEmpty)
-            sided.map(_.keySet).reduce(_ intersect _).toSeq.sorted
-          else Seq.empty
-        }
-      }
-      if (bloomCols.nonEmpty && hasFiles)
-        graft.io.BloomSidecar.write(s, dir, bloomCols.map(physName))
-      // declared CHECK constraints gate EVERY commit through this
-      // write — INSERTs and DML rewrites alike (Delta enforces its
-      // invariants on UPDATE/MERGE output too): one column-pruned
-      // aggregate pass over the staged directory, violation deletes
-      // the stage and raises before any manifest write
-      graft.io.Constraints.enforceStaged(s, root, dir, colMap)
+      // a DML rewrite carries the sidecar columns of the directories it
+      // replaces (a takedown must not leave an unprunable hole)
+      val replaced =
+        if (!fromRowOp) Nil
+        else opState.flatMap(_.replacedDirs).getOrElse(
+          scala.util.Try(Manifest.committed(s, root)).getOrElse(Nil))
+      Landing.prepare(s, landing.carrying(s, replaced), dir,
+        Some(info.schema()))
       opState.flatMap(_.replacedDirs) match {
         // runtime-group-filtered row op: replace exactly the matched
         // directories; everything else carries verbatim
@@ -387,11 +319,13 @@ object GraftPartitionedWrite {
   /** Land `data` partition-split and commit every leaf as ONE version
     * (append, or replacing for overwrite). Column names arrive
     * PHYSICAL (the caller translates a mapped table's logical names).
+    * `plan` chooses the sidecar columns and runs the declared
+    * constraints; the sidecars themselves come from the grouped
+    * one-job builds below, with the partition columns always stats.
     */
   def insert(s: SparkSession, root: String, data: DataFrame,
-      partitionCols: Seq[String], statsCols: Seq[String],
-      bloomCols: Seq[String], replacing: Boolean,
-      colMap: Map[String, String] = Map.empty): Unit = {
+      partitionCols: Seq[String], plan: Landing.Plan,
+      replacing: Boolean): Unit = {
     val stage = s"$root/data/w-" + java.util.UUID.randomUUID().toString
     val withShadow = partitionCols.foldLeft(data)((df, c) =>
       df.withColumn(shadow(c), org.apache.spark.sql.functions.col(c)))
@@ -410,7 +344,8 @@ object GraftPartitionedWrite {
     // declared CHECK constraints: one column-pruned pass over the
     // staged tree BEFORE any sidecar work — a violating batch deletes
     // the stage and raises with the manifest untouched
-    graft.io.Constraints.enforceStaged(s, root, stage, colMap)
+    Landing.enforce(s, plan, stage)
+    val (statsCols, bloomCols) = plan.columns(data.schema)
     val sc = (statsCols ++ partitionCols).distinct
     val (statBodies, counts) = installLeafStats(s, leaves, sc)
     val bloomed: Map[String, Seq[String]] =
@@ -493,7 +428,7 @@ object GraftPartitionedWrite {
       () => SkipStats.installRendered(s, d, body)
     })
     leaves.filterNot(rendered.map(_._1).toSet)
-      .foreach(d => SkipStats.write(s, d, cols))
+      .foreach(d => Landing.sidecars(s, d, (cols, Nil)))
     (rendered.map(t => t._1 -> t._2).toMap,
       rendered.map(t => t._1 -> t._3).toMap)
   }
@@ -529,7 +464,7 @@ object GraftPartitionedWrite {
     val maxBytes = s.conf
       .get("spark.graft.bloomSidecar.maxCollectBytes", "536870912").toLong
     if (bitsPer / 8 * leaves.size.toLong * cols.size > maxBytes) {
-      leaves.foreach(d => BloomSidecar.write(s, d, cols))
+      leaves.foreach(d => Landing.sidecars(s, d, (Nil, cols)))
       return leaves.map(_ -> cols).toMap
     }
     val df0 = graft.io.SchemaMemo.read(s, leaves)
@@ -573,7 +508,7 @@ object GraftPartitionedWrite {
     val done: Map[String, Seq[String]] =
       covered.map(t => t._1 -> t._2.map(_._1).toSeq).toMap
     val fallback = leaves.filterNot(done.contains)
-    fallback.foreach(d => BloomSidecar.write(s, d, cols))
+    fallback.foreach(d => Landing.sidecars(s, d, (Nil, cols)))
     done ++ fallback.map(_ -> cols)
   }
 }

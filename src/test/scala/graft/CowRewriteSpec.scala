@@ -31,8 +31,8 @@ class CowRewriteSpec extends AnyFunSuite {
       SkipStats.write(spark, d, Seq("k"))
       d
     }
-    val out = Cow.rewrite(spark, hit, s"$base/stage", "cow", 7,
-      df => df.filter(col("k") % 2 === 0))
+    val out = Cow.rewrite(spark, Landing.plan(spark, base), hit,
+      s"$base/stage", "cow", 7, df => df.filter(col("k") % 2 === 0))
     assert(out == (0 until nDirs).map(i => s"$base/stage/cow-v7-$i"),
       "replacements must come back in hit order with versioned names")
     out.zipWithIndex.foreach { case (d, i) =>
@@ -55,8 +55,8 @@ class CowRewriteSpec extends AnyFunSuite {
     (0L until 10L).map(k => (k, s"v$k")).toDF("k", "v")
       .coalesce(1).write.parquet(d)
     BloomSidecar.write(spark, d, Seq("k", "v"))
-    val Seq(out) = Cow.rewrite(spark, Seq(d), s"$base/stage", "cow", 1,
-      _.filter(lit(false)))
+    val Seq(out) = Cow.rewrite(spark, Landing.plan(spark, base), Seq(d),
+      s"$base/stage", "cow", 1, _.filter(lit(false)))
     assert(spark.read.parquet(out).count() == 0)
     val blooms = BloomSidecar.read(fsOf(out), out)
       .getOrElse(fail("the emptied directory must carry its bloom sidecar"))
@@ -82,12 +82,14 @@ class CowRewriteSpec extends AnyFunSuite {
     }
     src.foreach(Manifest.commit(spark, root, _))
     // a committed rewrite output already lives under the staging root
-    val kept = Cow.rewrite(spark, src.take(1), stage, "cow", 1, identity)
+    val kept = Cow.rewrite(spark, Landing.plan(spark, root), src.take(1),
+      stage, "cow", 1, identity)
     Manifest.rewrite(spark, root, kept ++ src.tail)
     val live = Manifest.entries(spark, root)
     val boom = new IllegalStateException("transform failed")
     val thrown = intercept[IllegalStateException] {
-      Cow.rewrite(spark, src.tail, stage, "cow", 2, df =>
+      Cow.rewrite(spark, Landing.plan(spark, root), src.tail, stage,
+        "cow", 2, df =>
         if (df.inputFiles.exists(_.contains("/src-2/"))) throw boom
         else { Thread.sleep(300); df })
     }

@@ -143,4 +143,78 @@ class DeclaredConstraintSpec extends AnyFunSuite {
     // rewrite burned nothing
     assert(Manifest.versions(spark, s"$w/t").size === 3)
   }
+
+  test("a merge-on-read UPDATE is constrained like the copy-on-write " +
+      "one: a violating update refuses and burns no version") {
+    val w = wh("mor")
+    spark.sql("CREATE TABLE dcmor.t (id BIGINT, cents BIGINT) " +
+      "USING graft TBLPROPERTIES('morKey'='id')")
+    spark.sql("INSERT INTO dcmor.t VALUES (1, 10), (2, 1)")
+    spark.sql("CALL dcmor.constrain('t', 'pos', 'cents > 0')")
+    val vBefore = Manifest.versions(spark, s"$w/t").last
+    val e = intercept[Exception](spark.sql(
+      "UPDATE dcmor.t SET cents = cents - 5 WHERE id = 2"))
+    assert(violation(e), s"got $e")
+    assert(Manifest.versions(spark, s"$w/t").last === vBefore,
+      "a rejected update must not burn a version")
+    assert(spark.sql("SELECT cents FROM dcmor.t WHERE id = 2")
+      .collect()(0).getLong(0) === 1L)
+    spark.sql("UPDATE dcmor.t SET cents = cents + 5 WHERE id = 2")
+    assert(spark.sql("SELECT sum(cents) FROM dcmor.t")
+      .collect()(0).getLong(0) === 16L)
+    assert(Manifest.committed(spark, s"$w/t")
+      .exists(graft.io.MergeOnRead.isTombstone),
+      "the accepted update took the merge-on-read path")
+  }
+
+  test("a quarantined ingest meets the table's declared constraints " +
+      "and sidecars before either table commits") {
+    val w = wh("quar")
+    val (root, qroot) = (s"$w/t", s"$w/q")
+    spark.sql("CREATE TABLE dcquar.t (id BIGINT, cents BIGINT) " +
+      "USING graft TBLPROPERTIES('statsCols'='id')")
+    spark.sql("CALL dcquar.constrain('t', 'small', 'id < 100')")
+    val route = Seq("pos" -> (col("cents") > 0))
+    def ingest(rows: Seq[(Long, Long)], name: String) =
+      Constraints.commitQuarantined(spark, root, qroot,
+        rows.toDF("id", "cents"), s"$root/data/$name",
+        s"$qroot/data/$name", route)
+    val e = intercept[Exception](
+      ingest(Seq((2L, 5L), (3L, -1L), (500L, 1L)), "b1"))
+    assert(violation(e), s"got $e")
+    assert(Manifest.versions(spark, root).last === 1 &&
+      Manifest.versions(spark, qroot).isEmpty,
+      "a refused ingest changes neither table")
+    val (_, qv) = ingest(Seq((2L, 5L), (3L, -1L)), "b2")
+    assert(qv.nonEmpty)
+    assert(spark.sql("SELECT id FROM dcquar.t").collect()
+      .map(_.getLong(0)).toSeq === Seq(2L))
+    val f = new Path(root).getFileSystem(spark.sparkContext
+      .hadoopConfiguration)
+    assert(graft.io.SkipStats.read(f, s"$root/data/b2")
+      .exists(_.contains("id")), "the clean rows carry the table's stats")
+  }
+
+  test("a streamed batch into a constrained table is refused whole") {
+    val w = wh("stream")
+    spark.sql("CREATE TABLE dcstream.t (id BIGINT, cents BIGINT) " +
+      "USING graft")
+    spark.sql("CALL dcstream.constrain('t', 'pos', 'cents > 0')")
+    val src = s"$w/src"
+    Seq((4L, 3L), (5L, -7L)).toDF("id", "cents").coalesce(1)
+      .write.parquet(src)
+    val q = spark.readStream.schema(spark.read.parquet(src).schema)
+      .parquet(src)
+      .writeStream.format("graft")
+      .option("path", s"$w/t")
+      .option("checkpointLocation", s"$w/ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    val e = intercept[Exception](q.awaitTermination())
+    assert(violation(e), s"got $e")
+    assert(Manifest.versions(spark, s"$w/t").last === 1,
+      "the refused batch must not commit")
+    assert(spark.sql("SELECT count(*) FROM dcstream.t")
+      .collect()(0).getLong(0) === 0L)
+  }
 }

@@ -509,6 +509,27 @@ class Dsv2CatalogSpec extends AnyFunSuite {
     assert(gone != null)
   }
 
+  test("an unscoped CALL compact keeps the table's stats and blooms on " +
+      "the compacted directory") {
+    wh
+    spark.sql("CREATE TABLE lake.ucompact (id BIGINT, v BIGINT) " +
+      "TBLPROPERTIES('statsCols'='id', 'bloomCols'='id')")
+    spark.sql("INSERT INTO lake.ucompact SELECT id, id FROM range(0, 50)")
+    spark.sql("INSERT INTO lake.ucompact SELECT id, id FROM range(50, 100)")
+    spark.sql("CALL lake.compact('ucompact')").collect()
+    val root = s"$wh/ucompact"
+    val Seq(d) = Manifest.committed(spark, root)
+    assert(d.contains("/compact-v"), s"got $d")
+    val f = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(SkipStats.read(f, d).exists(_.contains("id")),
+      s"$d must keep its skip-stats sidecar")
+    assert(graft.io.BloomSidecar.readKeys(f, d).exists(_.contains("id")),
+      s"$d must keep its bloom sidecar")
+    val pruned = spark.sql("SELECT id FROM lake.ucompact WHERE id < 50")
+    assert(pruned.count() === 50L)
+  }
+
   test("a recorded mor key auto-merges plain SQL reads of a " +
       "tombstoned table") {
     import spark.implicits._
@@ -1060,6 +1081,44 @@ class Dsv2CatalogSpec extends AnyFunSuite {
     // b2/b3 runtime-pruned
     assert(read === 200L,
       s"expected b0+b1 = 200 rows read (b2/b3 runtime-pruned), got $read")
+  }
+
+  test("runtime filtering advertises only columns the scan outputs: a " +
+      "sidecar or partition column pruned from the scan never breaks " +
+      "a join, a MERGE, or a partitioned MERGE") {
+    import spark.implicits._
+    wh
+    (0L until 40L).map(i => (i, i % 5 * 10)).toDF("id", "v")
+      .write.mode("overwrite").parquet(s"$wh/rfout_src_pq")
+    spark.read.parquet(s"$wh/rfout_src_pq")
+      .createOrReplaceTempView("rfout_src")
+    def load(t: String, ddl: String): Unit = {
+      spark.sql(s"CREATE TABLE lake.$t (id BIGINT, v BIGINT) $ddl")
+      spark.sql(s"INSERT INTO lake.$t SELECT id, id * 10 FROM range(0, 20)")
+      spark.sql(s"INSERT INTO lake.$t SELECT id, id * 10 FROM range(20, 40)")
+    }
+    def ids(q: String): Seq[Long] =
+      spark.sql(q).collect().map(_.getLong(0)).sorted.toSeq
+    // a join reading only `id` from a table with stats on id AND v
+    load("rfjoin", "TBLPROPERTIES('statsCols'='id,v')")
+    assert(ids("""SELECT t.id FROM lake.rfjoin t
+      JOIN (SELECT id FROM rfout_src WHERE v = 20) s ON t.id = s.id""") ===
+      (2L until 40L by 5))
+    // MERGE … UPDATE SET * with sidecars on the non-key column only
+    load("rfmerge", "TBLPROPERTIES('statsCols'='v', 'bloomCols'='v')")
+    spark.sql("""MERGE INTO lake.rfmerge t
+      USING (SELECT id, v + 1 AS v FROM rfout_src WHERE id < 5) s
+      ON t.id = s.id WHEN MATCHED THEN UPDATE SET *""")
+    assert(ids("SELECT v FROM lake.rfmerge WHERE id < 5") ===
+      Seq(1L, 11L, 21L, 31L, 41L))
+    // MERGE … DELETE on a table partitioned by a non-key column
+    spark.sql("CREATE TABLE lake.rfpart (id BIGINT, b BIGINT) " +
+      "PARTITIONED BY (b)")
+    spark.sql("INSERT INTO lake.rfpart SELECT id, id % 3 FROM range(0, 30)")
+    spark.sql("""MERGE INTO lake.rfpart t
+      USING (SELECT id FROM rfout_src WHERE id < 10) s
+      ON t.id = s.id WHEN MATCHED THEN DELETE""")
+    assert(ids("SELECT id FROM lake.rfpart") === (10L until 30L))
   }
 
   test("two-phase pruning: under the cap the static IN skips dirs at " +
