@@ -29,8 +29,9 @@ object HandleKlio {
   /** Outcome envelope: `ok` rows carry the transformed message, error rows
     * the original message + error text (for logging/metrics sinks).
     * `attempts` is how many times the fn ran for this element (1 = first
-    * try succeeded or failed fast); `nanos` the total fn wall time across
-    * attempts — the per-element source for kmsg-timer metrics
+    * try succeeded or failed fast; 0 = a message that passed by without
+    * work, as the runner's pass-thru rows do); `nanos` the total fn wall
+    * time across attempts — the per-element source for kmsg-timer metrics
     * ([[Metrics.timed]]).
     */
   case class Attempt(msg: KlioMessage, ok: Boolean, error: String,
@@ -76,7 +77,17 @@ object HandleKlio {
       retryOn: Throwable => Boolean = _ => true)
       : Dataset[Attempt] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[Attempt]
-    ds.map { msg =>
+    ds.map(attempt(fn, retries, retryDelayMs, timeoutMs, retryOn))
+  }
+
+  /** The per-message retry/timeout loop that [[apply]] maps, for callers
+    * that run it inside a map of their own (the pipeline runner maps it
+    * over the messages tagged `process` only).
+    */
+  def attempt(fn: KlioMessage => KlioMessage, retries: Int = 0,
+      retryDelayMs: Long = 0, timeoutMs: Long = 0,
+      retryOn: Throwable => Boolean = _ => true): KlioMessage => Attempt = {
+    msg =>
       var attempt = 0
       var fnNanos = 0L
       var result: Attempt = null
@@ -103,7 +114,6 @@ object HandleKlio {
         attempt += 1
       }
       result.copy(attempts = attempt, nanos = fnNanos)
-    }
   }
 
   /** Convenience `retryOn` for the common class-filter form

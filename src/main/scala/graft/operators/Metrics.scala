@@ -168,13 +168,17 @@ object Metrics {
     * in ns and relays kmsg-timer per transform): per-element `nanos` are
     * aggregated alongside the flow as max/mean/total plus the retry
     * counters (`kmsg-retry-attempt`, `_retry.py:59-66`), all observe-based
-    * — zero cost on the hot path, surfaced through [[Listener]].
+    * — zero cost on the hot path, surfaced through [[Listener]]. Only
+    * rows the fn ran on (`attempts > 0`) count: messages that passed by
+    * without work move neither the mean nor the retry counter.
     */
   def timed[T](ds: org.apache.spark.sql.Dataset[T], observation: String)
-      : org.apache.spark.sql.Dataset[T] =
+      : org.apache.spark.sql.Dataset[T] = {
+    val ran = col("attempts") > 0
     ds.observe(observation,
-      max(col("nanos")).as("kmsg-timer-max"),
-      avg(col("nanos")).as("kmsg-timer-mean"),
-      sum(col("nanos")).as("kmsg-timer-total"),
-      sum(col("attempts") - 1).as("kmsg-retry-attempt"))
+      max(when(ran, col("nanos"))).as("kmsg-timer-max"),
+      avg(when(ran, col("nanos"))).as("kmsg-timer-mean"),
+      sum(when(ran, col("nanos"))).as("kmsg-timer-total"),
+      sum(when(ran, col("attempts") - 1)).as("kmsg-retry-attempt"))
+  }
 }

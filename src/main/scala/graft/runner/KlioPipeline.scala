@@ -1,6 +1,6 @@
 package graft.runner
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.config.{KlioConfig, KlioIoConfig}
@@ -46,16 +46,16 @@ object KlioPipeline {
       case other => sys.error(s"unsupported event output type: $other")
     }
 
-  /** The configured standard prelude: the existence listings of the
-    * first data input and output (none when the check is skipped or the
-    * location unset) and their force/ping defaults, derived from `cfg`
-    * here and nowhere else. The listings are taken NOW, once; every
-    * event input the returned function routes shares them — a caller
-    * that must see fresh listings (a streaming micro-batch) calls this
-    * again.
+  /** The configured standard prelude as a tagging function
+    * ([[Prelude.tag]]): the existence listings of the first data input
+    * and output (none when the check is skipped or the location unset)
+    * and their force/ping defaults, derived from `cfg` here and nowhere
+    * else. The listings are taken NOW, once; every event input the
+    * returned function tags shares them — a caller that must see fresh
+    * listings (a streaming micro-batch) calls this again.
     */
   def prelude(spark: SparkSession, cfg: KlioConfig,
-      now: Column = current_timestamp()): DataFrame => Prelude.Routed = {
+      now: Column = current_timestamp()): DataFrame => DataFrame = {
     def listing(io: KlioIoConfig): Option[DataFrame] =
       if (io.skipExistenceCheck || io.location.isEmpty) None
       else Some(Prelude.listingFor(spark, io.location, io.fileSuffix))
@@ -64,9 +64,34 @@ object KlioPipeline {
     val dataOut = data.outputs.headOption.flatMap(listing)
     val forceDefault = data.outputs.headOption.exists(_.force)
     val pingDefault = data.inputs.headOption.exists(_.ping)
-    msgs => Prelude.standard(msgs, cfg.jobRef, dataIn, dataOut,
+    msgs => Prelude.tag(msgs, cfg.jobRef, dataIn, dataOut,
       forceDefault, pingDefault, now)
   }
+
+  /** An observation named uniquely: Spark rejects two different
+    * observations of one name in a plan, and one run may hold several.
+    */
+  private[graft] def observation(prefix: String): Observation =
+    Observation(s"$prefix-${java.util.UUID.randomUUID()}")
+
+  /** The count `name` of an observation whose action has run. */
+  private[graft] def counted(o: Observation, name: String): Long =
+    o.get(name).asInstanceOf[Long]
+
+  /** Writes `outBound` to every configured event output: the run's one
+    * action, which completes its observations. Cached only when more than
+    * one output consumes it, so the transform still runs once per message;
+    * with no output, a `noop` write runs the plan.
+    */
+  private def writeOutputs(outBound: DataFrame, cfg: KlioConfig): Unit =
+    cfg.jobConfig.events.outputs match {
+      case Seq() => outBound.write.format("noop").mode("overwrite").save()
+      case Seq(io) => writeEventOutput(outBound, io)
+      case ios =>
+        val shared = outBound.cache()
+        try ios.foreach(writeEventOutput(shared, _))
+        finally shared.unpersist()
+    }
 
   /** Multi-event-input fan-in (reference `run.py:458-508`): one prelude
     * chain PER event input, then the user function receives the named map
@@ -74,7 +99,9 @@ object KlioPipeline {
     * returns the outbound messages; pass-thru branches from every input
     * union into the event outputs, exactly like the single-input path.
     * Input names are the IO locations (the reference names fields by a
-    * sanitized identifier derived the same way).
+    * sanitized identifier derived the same way). Counts come from
+    * observations on the write's plan: the user output's rows, and the
+    * routes of each input on its pass-thru path, which reads every message.
     */
   def runMulti(spark: SparkSession, cfg: KlioConfig,
       userFn: Map[String, DataFrame] => DataFrame,
@@ -84,30 +111,31 @@ object KlioPipeline {
     require(locations.distinct.length == locations.length,
       s"duplicate event input locations: $locations — inputs are named by " +
         "location, so a duplicate would silently shadow its twin")
-    val inputsCached = cfg.jobConfig.events.inputs.map(io =>
-      io.location -> readEventInput(spark, cfg, io).cache())
-    val routedPerInput = inputsCached.map { case (loc, msgs) =>
-      loc -> route(msgs)
-    }
-    require(routedPerInput.nonEmpty, "at least one event input required")
-    // cached: the user transform must run once, not once per consumer
-    // (event output write + processed count)
-    val out = userFn(routedPerInput.map { case (k, r) => k -> r.process }
-      .toMap).cache()
-    val passThru = routedPerInput.map(_._2.passThru).reduce(_ unionByName _)
-    val outBound = out.unionByName(passThru).cache()
-    cfg.jobConfig.events.outputs.foreach(writeEventOutput(outBound, _))
-    val summary = RunSummary(
-      processed = out.count(),
-      passedThru = passThru.count(),
-      dropped = routedPerInput.map(_._2.drop.count()).sum)
-    outBound.unpersist()
-    out.unpersist()
-    inputsCached.foreach(_._2.unpersist())
-    summary
+    val tagged = cfg.jobConfig.events.inputs.map(io =>
+      io.location -> route(readEventInput(spark, cfg, io)))
+    require(tagged.nonEmpty, "at least one event input required")
+    val outRows = observation("klio_user_out")
+    val out = userFn(tagged.map { case (loc, t) =>
+      loc -> Prelude.split(t).process }.toMap)
+      .observe(outRows, count(lit(1)).as("n"))
+    val routes = tagged.map(_ => observation("klio_routes"))
+    val passThru = tagged.zip(routes).map { case ((_, t), o) =>
+      Prelude.split(Prelude.observeRoutes(t, o)).passThru
+    }.reduce(_ unionByName _)
+    writeOutputs(out.unionByName(passThru), cfg)
+    RunSummary(
+      processed = counted(outRows, "n"),
+      passedThru = routes.map(counted(_, Prelude.PassThru)).sum,
+      dropped = routes.map(counted(_, Prelude.Drop)).sum)
   }
 
-  /** Run the configured pipeline with a message-level user transform.
+  /** Run the configured pipeline with a message-level user transform, as
+    * one pass with one action: every message is tagged with its route,
+    * one typed map runs the transform (with HandleKlio's retry/timeout
+    * loop) on the `process` rows and passes the `pass_thru` rows with
+    * `attempts = 0`, and the event-output write consumes the result.
+    * Route and error counts are observed on the write's plan; timer and
+    * retry metrics likewise (kmsg-timer-*, reference client.py:119-151).
     * Returns routing counts. `now` is injectable for deterministic tests.
     */
   def run(spark: SparkSession, cfg: KlioConfig,
@@ -119,35 +147,33 @@ object KlioPipeline {
     val inputs = cfg.jobConfig.events.inputs
       .map(io => readEventInput(spark, cfg, io))
     require(inputs.nonEmpty, "at least one event input required")
-    val messages = inputs.reduce(_ unionByName _).cache()
+    val messages = inputs.reduce(_ unionByName _)
 
-    val routed = prelude(spark, cfg, now)(messages)
-
-    // cached: the user transform (typically heavy media work, possibly
-    // retried/timed-out per element) must execute exactly once per message
-    // — the ok/error splits, the output writes, and the summary counts are
-    // all separate consumers of the same attempt stream. Timer/retry
-    // metrics observe the stream in passing (kmsg-timer-*, reference
-    // client.py:119-151).
+    val routes = observation("klio_routes")
+    val errors = observation("klio_errors")
+    val work = HandleKlio.attempt(transform, retries = retries,
+      timeoutMs = timeoutMs)
     val attempts = Metrics.timed(
-      HandleKlio(routed.process.as[KlioMessage], transform,
-        retries = retries, timeoutMs = timeoutMs),
-      cfg.jobName + "-transform").cache()
-    val okOut = HandleKlio.ok(attempts).toDF()
-    val errored = HandleKlio.dropped(attempts)
+      Prelude.observeRoutes(prelude(spark, cfg, now)(messages), routes)
+        .filter(col(Prelude.RouteCol) =!= Prelude.Drop)
+        .select(struct(KlioMessage.schema.fieldNames.map(col): _*).as("msg"),
+          (col(Prelude.RouteCol) === Prelude.Process).as("process"))
+        .as[(KlioMessage, Boolean)]
+        .map { case (msg, process) =>
+          if (process) work(msg)
+          else HandleKlio.Attempt(msg, ok = true, "", attempts = 0)
+        },
+      cfg.jobName + "-transform")
+      .observe(errors, count(when(!col("ok"), 1)).as("n"))
 
-    // User output ∪ pass-thru branches feed every configured event output
-    // (run.py:545-558); cache because N outputs re-consume it.
-    val outBound = okOut.unionByName(routed.passThru).cache()
-    cfg.jobConfig.events.outputs.foreach(writeEventOutput(outBound, _))
+    // User output ∪ pass-thru rows feed every configured event output
+    // (run.py:545-558).
+    writeOutputs(attempts.filter(col("ok")).select(col("msg.*")), cfg)
 
-    val summary = RunSummary(
-      processed = okOut.count(),
-      passedThru = routed.passThru.count(),
-      dropped = routed.drop.count() + errored.count())
-    outBound.unpersist()
-    attempts.unpersist()
-    messages.unpersist()
-    summary
+    val errored = counted(errors, "n")
+    RunSummary(
+      processed = counted(routes, Prelude.Process) - errored,
+      passedThru = counted(routes, Prelude.PassThru),
+      dropped = counted(routes, Prelude.Drop) + errored)
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.Row
 
 import graft.config.KlioConfig
 import graft.model.KlioWire
+import graft.operators.Prelude
 import graft.runner.KlioPipeline
 
 /** Streaming mode — the reference's default (`pipeline_options.streaming:
@@ -26,10 +27,10 @@ import graft.runner.KlioPipeline
   *    event-time column with watermarking.
   *
   * The prelude operators are the SAME code as batch
-  * ([[KlioPipeline.prelude]]) — filters and stream-static joins are
-  * streaming-legal, so the whole routing layer is mode-agnostic. That
-  * is the Spark-native answer to klio keeping two run modes behind one
-  * YAML flag.
+  * ([[KlioPipeline.prelude]]) — one tagging projection whose existence
+  * tests are broadcast joins against static listings, so the whole
+  * routing layer is mode-agnostic. That is the Spark-native answer to
+  * klio keeping two run modes behind one YAML flag.
   */
 object StreamingPipeline {
 
@@ -69,22 +70,23 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime("1 second"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // two actions consume this micro-batch (the wire write and the
-        // drop count) — persist so the source parse + routing joins run
-        // once, not once per action
-        batch.persist()
-        try {
-          val routed = KlioPipeline.prelude(batch.sparkSession, cfg)(batch)
-          val out = transform(routed.process).unionByName(routed.passThru)
-          KlioWire.encode(out).write.mode("append").text(outputDir)
-          // drops never vanish silently (reference logs every one,
-          // helpers.py:264-284): count per micro-batch and log
-          val nDropped = routed.drop.count()
-          if (nDropped > 0)
-            org.apache.log4j.Logger.getLogger("graft.klio.streaming")
-              .warn(s"batch $batchId: dropped $nDropped message(s) " +
-                "(wrong recipient or missing input)")
-        } finally batch.unpersist()
+        val tagged = KlioPipeline.prelude(batch.sparkSession, cfg)(batch)
+        // the wire write is the micro-batch's one action; its pass-thru
+        // path reads every message of the batch, so the route counts are
+        // observed there
+        val routes = KlioPipeline.observation(s"klio_stream_routes-$batchId")
+        val passThru =
+          Prelude.split(Prelude.observeRoutes(tagged, routes)).passThru
+        val out = transform(Prelude.split(tagged).process)
+          .unionByName(passThru)
+        KlioWire.encode(out).write.mode("append").text(outputDir)
+        // drops never vanish silently (reference logs every one,
+        // helpers.py:264-284): count per micro-batch and log
+        val nDropped = KlioPipeline.counted(routes, Prelude.Drop)
+        if (nDropped > 0)
+          org.apache.log4j.Logger.getLogger("graft.klio.streaming")
+            .warn(s"batch $batchId: dropped $nDropped message(s) " +
+              "(wrong recipient or missing input)")
         ()
       }
   }

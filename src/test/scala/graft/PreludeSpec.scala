@@ -46,9 +46,10 @@ class PreludeSpec extends AnyFunSuite {
     val messages = Seq(msg("track-3"), msg("track-39"), msg("gone")).toDS()
       .toDF()
     def route(listing: org.apache.spark.sql.DataFrame) = {
-      val (found, missing) = Prelude.splitInputExists(messages, listing)
-      (found.collect().map(_.getString(0)).toSet,
-        missing.collect().map(_.getString(0)).toSet)
+      val routed = Prelude.standard(messages, job, Some(listing), None)
+      assert(routed.passThru.count() === 0)
+      (routed.process.select("element").as[String].collect().toSet,
+        routed.drop.select("element").as[String].collect().toSet)
     }
     assert(route(driver) === route(dist))
     assert(route(dist) === ((Set("track-3", "track-39"), Set("gone"))))
@@ -81,6 +82,39 @@ class PreludeSpec extends AnyFunSuite {
       === Array("done", "pinger"))
     assert(routed.drop.select("element").as[String].collect().sorted
       === Array("lost", "not_ours"))
+  }
+
+  test("every message lands in exactly one route, whatever is null") {
+    // messages from a source that bypassed decode: no metadata at all, no
+    // mode, and a triggerChildrenOf struct whose jobName is null
+    val lines = Seq(
+      """{"element":"no_metadata"}""",
+      """{"element":"no_mode","metadata":{"intendedRecipients":""" +
+        """{"recipients":[]}}}""",
+      """{"element":"partial_origin","metadata":{"intendedRecipients":""" +
+        """{"mode":"anyone","triggerChildrenOf":{"gcpProject":"p"}}}}""",
+      """{"element":"partial_origin_limited","metadata":""" +
+        """{"intendedRecipients":{"mode":"limited","recipients":""" +
+        """[{"jobName":"test-job","gcpProject":"test-project"}],""" +
+        """"triggerChildrenOf":{"gcpProject":"test-project"}}}}""",
+      """{"element":"plain","metadata":{"intendedRecipients":""" +
+        """{"mode":"anyone"}}}""")
+    val messages = spark.read.schema(KlioMessage.schema).json(lines.toDS())
+    val routed = Prelude.standard(messages, job, None, None)
+    def elements(df: org.apache.spark.sql.DataFrame) =
+      df.select("element").as[String].collect().toSeq
+    val all = elements(routed.process) ++ elements(routed.passThru) ++
+      elements(routed.drop)
+    assert(all.sorted === elements(messages).sorted)
+    assert(elements(routed.process).sorted === Seq("partial_origin",
+      "partial_origin_limited", "plain"))
+    assert(elements(routed.drop).sorted === Seq("no_metadata", "no_mode"))
+    val (kept, dropped) = Prelude.checkRecipients(messages, job)
+    assert(kept.count() + dropped.count() === lines.length)
+    // a partial origin is not this job: the mode stays as it came
+    assert(kept.filter(col("element") === "partial_origin_limited")
+      .select("metadata.intendedRecipients.mode").as[String].collect()
+      === Array("limited"))
   }
 
   test("config-level global ping routes everything to pass_thru") {
