@@ -54,57 +54,42 @@ object BloomSidecar {
     case _ => None
   }
 
-  /** Build and write the directory's bloom sidecar over `cols`.
-    * One pass per column (driver holds one filter at a time); expected
-    * items = the directory's row count — directories are single write
-    * jobs, so the count is the right capacity without a distinct pass.
-    * A column with no non-null value (every column of an emptied
-    * directory) gets an EMPTY filter, which rejects every probe — right,
-    * since no equality probe can match there. `bloom_filter_agg` returns
-    * null over such input, which `df.stat.bloomFilter` cannot read.
+  /** Build and write the directory's bloom sidecar over `cols`, given
+    * its row count and each column's non-null count (what the write
+    * observed). One pass per column (driver holds one filter at a
+    * time); expected items = the row count — directories are single
+    * write jobs, so the count is the right capacity without a distinct
+    * pass. A column with no non-null value (every column of an emptied
+    * directory) gets an EMPTY filter without a job, which rejects every
+    * probe — right, since no equality probe can match there.
+    * `bloom_filter_agg` returns null over such input, which
+    * `df.stat.bloomFilter` cannot read.
     */
-  def write(s: SparkSession, dataDir: String, cols: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.{col, count, lit}
+  def write(s: SparkSession, dataDir: String, cols: Seq[String],
+      rows: Long, nonNull: Map[String, Long]): Unit = {
     val df = SchemaMemo.read(s, Seq(dataDir))
-    val typed = cols.map { c =>
+    val expected = math.max(rows, 1024L)
+    val filters = cols.map { c =>
       val dt = df.schema(c).dataType
-      (c, tag(dt).getOrElse(throw new IllegalArgumentException(
-        s"no bloom-sidecar support for column $c of type $dt")))
-    }
-    // row count and per-column non-null counts in the one job the bare
-    // row count took
-    val counts = df.agg(count(lit(1)), cols.map(c => count(col(c))): _*)
-      .head()
-    val expected = math.max(counts.getLong(0), 1024L)
-    val filters = typed.zipWithIndex.map { case ((c, t), i) =>
+      val t = tag(dt).getOrElse(throw new IllegalArgumentException(
+        s"no bloom-sidecar support for column $c of type $dt"))
       (c, t,
-        if (counts.getLong(1 + i) == 0L) BloomFilter.create(expected, fpp(s))
+        if (nonNull(c) == 0L) BloomFilter.create(expected, fpp(s))
         else df.stat.bloomFilter(c, expected, fpp(s)))
     }
-    val f = new Path(dataDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = new DataOutputStream(
-      f.create(new Path(dataDir, FileName), true))
-    try {
-      out.writeUTF(Magic)
-      out.writeInt(filters.size)
-      filters.foreach { case (c, t, bf) =>
-        out.writeUTF(c)
-        out.writeUTF(t)
-        val bytes = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bytes)
-        out.writeInt(bytes.size())
-        out.write(bytes.toByteArray)
-      }
-    } finally out.close()
+    install(s, dataDir, filters.map { case (c, t, bf) =>
+      val bytes = new java.io.ByteArrayOutputStream()
+      bf.writeTo(bytes)
+      (c, t, bytes.toByteArray)
+    })
   }
 
   /** Write the sidecar from PRE-SERIALIZED filter bytes — the install
     * half of the one-job grouped build
     * ([[graft.expressions.BloomAgg]]): the aggregation already produced
     * each directory's filters, so installing them is one small driver
-    * file write per directory, never a Spark job. Byte layout is
-    * identical to [[write]]'s.
+    * file write per directory, never a Spark job. [[write]] lands its
+    * filters through here too.
     */
   def install(s: SparkSession, dataDir: String,
       filters: Seq[(String, String, Array[Byte])]): Unit = {

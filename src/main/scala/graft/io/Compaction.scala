@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Small-file compaction — the table-maintenance operator every long-lived
   * 100 TB lake needs: streaming appends, per-key partitioned writes, and
@@ -53,11 +53,19 @@ object Compaction {
     */
   def compactAll(s: SparkSession, dirs: Seq[String], out: String,
       targetBytes: Long): Int = {
+    val (rows, n) = sized(s, dirs, targetBytes)
+    rows.write.mode("overwrite").parquet(out)
+    n
+  }
+
+  /** The snapshot's rows repartitioned into the file count
+    * [[compactAll]] writes, and that count.
+    */
+  def sized(s: SparkSession, dirs: Seq[String],
+      targetBytes: Long): (DataFrame, Int) = {
     require(dirs.nonEmpty, "no input directories")
     val bytes = dirs.map(d => plan(s, d, targetBytes)._2).sum
     val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    SchemaMemo.read(s, dirs).repartition(n)
-      .write.mode("overwrite").parquet(out)
-    n
+    (SchemaMemo.read(s, dirs).repartition(n), n)
   }
 }

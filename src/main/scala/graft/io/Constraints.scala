@@ -63,9 +63,11 @@ object Constraints {
       batchDir: String, constraints: Seq[(String, Column)],
       statsCols: Seq[String] = Nil,
       committer: Committer = FsCreateCommitter): Int = {
-    df.write.mode("overwrite").parquet(batchDir)
+    val plan = Landing.plan(s, root, statsCols)
+    val seen = Landing.observing(plan, df)(
+      _.write.mode("overwrite").parquet(batchDir))
     enforceStaged(s, batchDir, constraints)
-    Landing.prepare(s, Landing.plan(s, root, statsCols), batchDir)
+    Landing.prepare(s, plan, batchDir, Some(seen))
     // commitIfAbsent: a retried ingest whose predecessor crashed after
     // this directory's commit must not append it twice (the staged
     // overwrite above already absorbed a crash BEFORE the commit)
@@ -107,16 +109,19 @@ object Constraints {
     df.withColumn("violation", tag)
       .write.mode("overwrite").parquet(stagingDir)
     val staged = SchemaMemo.read(s, Seq(stagingDir))
-    staged.filter(col("violation").isNull).drop("violation")
-      .write.mode("overwrite").parquet(batchDir)
+    val (plan, qPlan) = (Landing.plan(s, root),
+      Landing.plan(s, quarantineRoot))
+    val seen = Landing.observing(plan,
+      staged.filter(col("violation").isNull).drop("violation"))(
+      _.write.mode("overwrite").parquet(batchDir))
     val nBad = staged.filter(col("violation").isNotNull).count()
-    if (nBad > 0) staged.filter(col("violation").isNotNull)
-      .write.mode("overwrite").parquet(quarantineDir)
+    val qSeen = if (nBad == 0) None else Some(Landing.observing(qPlan,
+      staged.filter(col("violation").isNotNull))(
+      _.write.mode("overwrite").parquet(quarantineDir)))
     // both directories land before either commits, so a table's own
     // declared constraints refuse the ingest with neither table changed
-    Landing.prepare(s, Landing.plan(s, root), batchDir)
-    if (nBad > 0)
-      Landing.prepare(s, Landing.plan(s, quarantineRoot), quarantineDir)
+    Landing.prepare(s, plan, batchDir, Some(seen))
+    qSeen.foreach(q => Landing.prepare(s, qPlan, quarantineDir, Some(q)))
     // both commits idempotent per directory: an at-least-once retry of
     // the whole ingest re-overwrites the same dirs and re-commits as
     // no-ops — no duplicated rows in either table

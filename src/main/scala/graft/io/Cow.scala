@@ -63,9 +63,10 @@ private[io] object Cow {
       xform: DataFrame => DataFrame): Seq[String] =
     GraftPar.all(hit.zipWithIndex.map { case (d, i) => () =>
       val outd = s"$stagingDir/$prefix-v$baseVersion-$i"
-      xform(SchemaMemo.read(s, Seq(d)))
-        .write.mode("overwrite").parquet(outd)
-      Landing.prepare(s, plan.carrying(s, Seq(d)), outd)
+      val carried = plan.carrying(s, Seq(d))
+      val seen = Landing.observing(carried, xform(SchemaMemo.read(s,
+        Seq(d))))(_.write.mode("overwrite").parquet(outd))
+      Landing.prepare(s, carried, outd, Some(seen))
       outd
     })
 }

@@ -37,9 +37,11 @@ object IndexCompaction {
       targetBytes: Long = 64L * 1024 * 1024,
       statsCols: Seq[String] = Nil): Int = {
     val entries = Manifest.committed(s, root)
-    Compaction.compactAll(s, entries, dest, targetBytes)
-    Landing.prepare(s, Landing.plan(s, root, statsCols)
-      .carrying(s, entries), dest)
+    val plan = Landing.plan(s, root, statsCols).carrying(s, entries)
+    val seen = Landing.observing(plan,
+      Compaction.sized(s, entries, targetBytes)._1)(
+      _.write.mode("overwrite").parquet(dest))
+    Landing.prepare(s, plan, dest, Some(seen))
     Manifest.rewrite(s, root, Seq(dest), op = "compact")
   }
 
@@ -80,10 +82,11 @@ object IndexCompaction {
     val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     // mergeSchema: a drift-evolved slice must carry the UNION schema
     // through the rewrite (the cluster rule), not a random footer's
-    SchemaMemo.readMerged(s, candidates)
-      .repartition(n).write.mode("overwrite").parquet(dest)
-    Landing.prepare(s, Landing.plan(s, root, statsCols)
-      .carrying(s, candidates), dest)
+    val plan = Landing.plan(s, root, statsCols).carrying(s, candidates)
+    val seen = Landing.observing(plan,
+      SchemaMemo.readMerged(s, candidates).repartition(n))(
+      _.write.mode("overwrite").parquet(dest))
+    Landing.prepare(s, plan, dest, Some(seen))
     Some(Manifest.replaceDirs(s, root, candidates.toSet, Seq(dest),
       op = "compact"))
   }
@@ -98,10 +101,12 @@ object IndexCompaction {
     */
   def compactStats(s: SparkSession, root: String, dest: String)(
       agg: DataFrame => DataFrame): Int = {
-    agg(Manifest.snapshot(s, root)).coalesce(1)
-      .write.mode("overwrite").parquet(dest)
-    Landing.prepare(s, Landing.plan(s, root)
-      .carrying(s, Manifest.committed(s, root)), dest)
+    val plan = Landing.plan(s, root)
+      .carrying(s, Manifest.committed(s, root))
+    val seen = Landing.observing(plan,
+      agg(Manifest.snapshot(s, root)).coalesce(1))(
+      _.write.mode("overwrite").parquet(dest))
+    Landing.prepare(s, plan, dest, Some(seen))
     Manifest.rewrite(s, root, Seq(dest))
   }
 }

@@ -1,7 +1,8 @@
 package graft.io
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row,
+  SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.io.dsv2.GraftTableProps
@@ -17,6 +18,12 @@ import graft.io.dsv2.GraftTableProps
   *    has at a type the sidecar supports;
   *  - the table's declared CHECK constraints (a violation deletes it
   *    and raises, so nothing commits).
+  * The statistics behind the sidecars come from the write that made
+  * the directory: a V1 write runs through [[observing]], a DSv2 write
+  * through [[graft.io.dsv2.ObservingWrites]], and [[prepare]] installs
+  * what they saw without a Spark job (each bloom column still takes one
+  * job to build its filter). Only a directory the engine did not write
+  * itself is re-read ([[sidecars]]).
   * "Replaced" = the data directories whose rows it rewrites (DML, fold,
   * compaction, clustering). Tombstones are key lists, not data, and
   * never land here; the commit kind stays with the caller.
@@ -61,6 +68,14 @@ private[graft] object Landing {
       (pick(stats, SkipStats.supportedType), pick(bloom, BloomSidecar.tag(_)
         .nonEmpty))
     }
+
+    /** The columns a write of `schema` observes: every sidecar column,
+      * since a bloom's size and emptiness come from its counts.
+      */
+    def observed(schema: StructType): Seq[String] = {
+      val (stats, bloom) = columns(schema)
+      (stats ++ bloom).distinct.sorted
+    }
   }
 
   /** A comma-separated column list (an option or property value). */
@@ -90,23 +105,39 @@ private[graft] object Landing {
     s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
       .coalesce(1).write.mode("append").parquet(dir)
 
+  /** Run `write` on `df` with the statistics `plan` needs observed on
+    * it, and return them for [[prepare]]: the aggregates ride the write's
+    * own job.
+    */
+  def observing(plan: Plan, df: DataFrame)(write: DataFrame => Unit)
+      : SkipStats.Observed = {
+    val cols = plan.observed(df.schema)
+    val aggs = SkipStats.aggregates(df.schema, cols)
+    val o = Observation(s"graft-landing-${java.util.UUID.randomUUID()}")
+    write(df.observe(o, aggs.head, aggs.tail: _*))
+    SkipStats.observedFrom(df.schema, cols,
+      Row.fromSeq(SkipStats.aggregateNames(cols.size).map(o.get)))
+  }
+
   /** Make `dir` ready to commit under `plan` (see the object doc).
-    * `schema` is needed only when the directory may hold no parquet
-    * file (a DSv2 write whose tasks produced none); such a directory
-    * holds no rows, so its sidecars are rendered without a Spark job
-    * and no constraint can fail on it.
+    * `seen` is what the write observed ([[observing]]); a directory the
+    * engine did not write passes None and is re-read. `schema` is needed
+    * only when the directory may hold no parquet file (a DSv2 write
+    * whose tasks produced none); such a directory holds no rows, so no
+    * constraint can fail on it.
     */
   def prepare(s: SparkSession, plan: Plan, dir: String,
+      seen: Option[SkipStats.Observed],
       schema: Option[StructType] = None): Unit =
     SchemaMemo.schemaOf(s, dir) match {
       case Some(landed) =>
         enforce(s, plan, dir)
-        sidecars(s, dir, plan.columns(landed))
+        land(s, dir, plan.columns(landed), seen)
       case None =>
         val empty = schema.getOrElse(throw new IllegalStateException(
           s"landed directory $dir holds no parquet file"))
         schemaFile(s, dir, empty)
-        emptySidecars(s, dir, empty, plan.columns(empty))
+        land(s, dir, plan.columns(empty), seen)
     }
 
   /** The declared-constraint step alone, for a staged tree whose
@@ -116,30 +147,22 @@ private[graft] object Landing {
     Constraints.enforceStaged(s, dir, plan.constraints, plan.colMap)
 
   /** Compute and install sidecars over already-chosen physical
-    * (stats, bloom) columns: one stats job, one bloom job per column.
+    * (stats, bloom) columns of a directory the engine did not write:
+    * one job re-reads its aggregates, then one job per bloom column.
     */
   def sidecars(s: SparkSession, dir: String,
-      cols: (Seq[String], Seq[String])): Unit = {
-    if (cols._1.nonEmpty) SkipStats.write(s, dir, cols._1)
-    if (cols._2.nonEmpty) BloomSidecar.write(s, dir, cols._2)
-  }
+      cols: (Seq[String], Seq[String])): Unit = land(s, dir, cols, None)
 
-  /** The sidecars [[sidecars]] would compute over zero rows — count 0,
-    * no bounds, empty filters — installed without reading the data.
-    */
-  private def emptySidecars(s: SparkSession, dir: String,
-      schema: StructType, cols: (Seq[String], Seq[String])): Unit = {
+  private def land(s: SparkSession, dir: String,
+      cols: (Seq[String], Seq[String]),
+      seen: Option[SkipStats.Observed]): Unit = {
     val (stats, bloom) = cols
-    if (stats.nonEmpty)
-      SkipStats.install(s, dir, 0L, stats.map(c => c -> SkipStats.ColStats(
-        SkipStats.typeTagOf(schema(c).dataType).get, None)),
-        stats.map(_ -> 0L).toMap)
-    if (bloom.nonEmpty) {
-      val bytes = new java.io.ByteArrayOutputStream()
-      org.apache.spark.util.sketch.BloomFilter
-        .create(1024L, BloomSidecar.fpp(s)).writeTo(bytes)
-      BloomSidecar.install(s, dir, bloom.map(c =>
-        (c, BloomSidecar.tag(schema(c).dataType).get, bytes.toByteArray)))
+    if (stats.nonEmpty || bloom.nonEmpty) {
+      val got = seen.getOrElse(
+        SkipStats.reread(s, dir, (stats ++ bloom).distinct))
+      if (stats.nonEmpty) SkipStats.install(s, dir, got, stats)
+      if (bloom.nonEmpty) BloomSidecar.write(s, dir, bloom, got.rows,
+        bloom.map(c => c -> got.cols(c)._2).toMap)
     }
   }
 }

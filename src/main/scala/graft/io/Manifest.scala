@@ -612,15 +612,15 @@ object Manifest {
     * table built by streaming (st8's foreachBatch) or by incremental
     * index commits (t25 postings, s14 IVF lists) prunable from its very
     * first batch, instead of unprunable until some later maintenance
-    * pass. Sidecar
-    * before manifest: a committed directory therefore always has its
+    * pass. The caller wrote the directory, so its stats come from one
+    * re-read of it ([[Landing.sidecars]]). Sidecar before manifest: a committed directory therefore always has its
     * stats; a crash in between leaves an uncommitted orphan whose
     * sidecar dies with it, exactly like its data.
     */
   def commitWithStats(s: SparkSession, root: String, batchDir: String,
       statsCols: Seq[String],
       committer: Committer = FsCreateCommitter): Int = {
-    Landing.prepare(s, Landing.plan(s, root, statsCols), batchDir)
+    Landing.prepare(s, Landing.plan(s, root, statsCols), batchDir, None)
     commit(s, root, batchDir, committer)
   }
 

@@ -75,12 +75,14 @@ object Merge {
       }
     }
     val upsertDir = s"$stagingDir/merge-upsert-v$baseV"
-    source.write.mode("overwrite").parquet(upsertDir)
     // the appended source inherits the table's pruning discipline: the
     // union of every data directory's sidecar columns, cut down by
     // Landing to the columns the SOURCE has at a supported type (the
     // source schema is the caller's, not the table's)
-    Landing.prepare(s, plan.carrying(s, dirs), upsertDir)
+    val upsertPlan = plan.carrying(s, dirs)
+    val seen = Landing.observing(upsertPlan, source)(
+      _.write.mode("overwrite").parquet(upsertDir))
+    Landing.prepare(s, upsertPlan, upsertDir, Some(seen))
     val v = Manifest.rewrite(s, root,
       carried ++ tombCarried ++ newTombs ++ rewritten :+ upsertDir,
       committer)

@@ -337,9 +337,12 @@ object MergeOnRead {
     // private staging dirs — submit both at once (guide §2.6) instead
     // of serially; an empty key list (pure-preimage slice) deletes
     // both staged dirs, exactly the old early-return
-    GraftPar.all(Seq(
-      () => keys.select(col(keyCol)).distinct().write.parquet(tombDir),
-      () => rows.write.parquet(insDir)))
+    val plan = Landing.plan(s, root, statsCols)
+    val seen = GraftPar.all(Seq(
+      () => { keys.select(col(keyCol)).distinct().write.parquet(tombDir)
+        None },
+      () => Some(Landing.observing(plan, rows)(_.write.parquet(insDir)))))
+      .flatten
     val f = new Path(tombDir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     if (Manifest.dirRowCount(s, Seq(tombDir)) == 0L) {
@@ -347,7 +350,7 @@ object MergeOnRead {
       f.delete(new Path(insDir), true)
       return None
     }
-    Landing.prepare(s, Landing.plan(s, root, statsCols), insDir)
+    Landing.prepare(s, plan, insDir, seen.headOption)
     // conflict-detecting commit: a racer that landed a same-or-higher
     // epoch over OVERLAPPING keys refuses (both morins copies of a
     // shared key would stay visible — silent duplication); disjoint-key

@@ -24,8 +24,11 @@ import java.nio.charset.StandardCharsets
   * with the directory through commit, carry, vacuum, and time travel
   * with no extra protocol — and a directory without a sidecar (a fold
   * rewrite, a foreign writer) is conservatively KEPT by pruning, never
-  * wrongly skipped. [[Landing.prepare]] calls [[write]] after a
-  * directory lands and before it commits; readers use [[scan]].
+  * wrongly skipped. The engine's own writes observe the [[aggregates]]
+  * while they write ([[Landing.observing]], [[graft.io.dsv2.ObservingWrites]])
+  * and [[Landing.prepare]] [[install]]s them before the commit, with no
+  * Spark job; [[write]] computes the same aggregates by re-reading a
+  * directory written outside the engine. Readers use [[scan]].
   */
 object SkipStats {
 
@@ -79,12 +82,6 @@ object SkipStats {
     */
   def supportedType(dt: DataType): Boolean = typeTag(dt).nonEmpty
 
-  /** The stored type tag for a supported type — what [[install]]'s
-    * callers pass as `ColStats.tpe` when they computed the aggregates
-    * themselves (one grouped job over many directories).
-    */
-  def typeTagOf(dt: DataType): Option[String] = typeTag(dt)
-
   private def typeTag(dt: DataType): Option[String] = dt match {
     case ByteType | ShortType | IntegerType | LongType => Some("long")
     case FloatType | DoubleType => Some("double")
@@ -121,33 +118,102 @@ object SkipStats {
   val NegInf: String = "\u0000__graft_neg_inf"
   val PosInf: String = "\u0000__graft_pos_inf"
 
-  /** Compute min/max for `cols` over the directory's rows and install
-    * the sidecar. Call after writing `dataDir`, before committing it.
-    * Columns with unsupported types are rejected — silently writing no
-    * stats would look identical to a skippable column.
+  /** A directory's statistics as its writer saw them: the row count
+    * and, per column, its bounds and non-null count — what a sidecar
+    * over any subset of [[cols]] holds.
     */
-  def write(s: SparkSession, dataDir: String, cols: Seq[String]): Unit = {
-    val df = SchemaMemo.read(s, Seq(dataDir))
-    val tags = cols.map { c =>
-      val dt = df.schema(c).dataType
-      c -> typeTag(dt).getOrElse(throw new IllegalArgumentException(
-        s"no skip-stats support for column $c of type $dt"))
-    }
-    val aggs = count(lit(1)).as("_cnt") +: tags.flatMap { case (c, _) =>
-      val e = statExpr(c, df.schema(c).dataType)
-      Seq(min(e).cast("string"), max(e).cast("string"), count(col(c)))
-    }
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val stats = tags.zipWithIndex.map { case ((c, t), i) =>
-      val (mn, mx) = (row.getString(1 + 3 * i), row.getString(2 + 3 * i))
-      val bounds = if (mn != null && mx != null) Some((mn, mx)) else None
-      c -> ColStats(t, bounds)
-    }
-    val nonNull = tags.zipWithIndex.map { case ((c, _), i) =>
-      c -> row.getLong(3 + 3 * i)
-    }
-    install(s, dataDir, row.getLong(0), stats, nonNull.toMap)
+  final case class Observed(rows: Long, cols: Map[String, (ColStats, Long)])
+
+  /** The stored type tag of `schema`'s column `c`; unsupported types
+    * are rejected.
+    */
+  private[graft] def tagOf(schema: StructType, c: String): String = {
+    val dt = schema(c).dataType
+    typeTag(dt).getOrElse(throw new IllegalArgumentException(
+      s"no skip-stats support for column $c of type $dt"))
   }
+
+  /** The aggregates a sidecar over `cols` of a frame of `schema` holds,
+    * in order: the row count, then per column the min and max of
+    * [[statExpr]] cast to string and the non-null count. Every stats
+    * writer aggregates these — the re-read in [[write]], an observed
+    * write ([[Landing.observing]]) and the grouped one-job build — and
+    * [[observedFrom]] reads them back. Columns with unsupported types
+    * are rejected: silently writing no stats would look identical to a
+    * skippable column.
+    */
+  private[graft] def aggregates(schema: StructType, cols: Seq[String])
+      : Seq[org.apache.spark.sql.Column] = {
+    val named = aggregateNames(cols.size)
+    (count(lit(1)) +: cols.flatMap { c =>
+      tagOf(schema, c)
+      val e = statExpr(c, schema(c).dataType)
+      Seq(min(e).cast("string"), max(e).cast("string"), count(col(c)))
+    }).zip(named).map { case (a, n) => a.as(n) }
+  }
+
+  /** The output names of [[aggregates]] over `n` columns. */
+  private[graft] def aggregateNames(n: Int): Seq[String] =
+    "_graft_rows" +: (0 until n).flatMap(i =>
+      Seq(s"_graft_min$i", s"_graft_max$i", s"_graft_nn$i"))
+
+  /** The [[Observed]] statistics in `row`, whose fields from `offset`
+    * on are [[aggregates]]`(schema, cols)`.
+    */
+  private[graft] def observedFrom(schema: StructType, cols: Seq[String],
+      row: org.apache.spark.sql.Row, offset: Int = 0): Observed =
+    Observed(row.getLong(offset), cols.zipWithIndex.map { case (c, i) =>
+      val at = offset + 1 + 3 * i
+      val (mn, mx) = (row.getString(at), row.getString(at + 1))
+      val bounds = if (mn != null && mx != null) Some((mn, mx)) else None
+      c -> ((ColStats(tagOf(schema, c), bounds), row.getLong(at + 2)))
+    }.toMap)
+
+  /** [[aggregates]] over a directory's rows by re-reading it — for a
+    * directory the engine did not write itself (a retrofit, a caller's
+    * own directory, a fixture).
+    */
+  def reread(s: SparkSession, dataDir: String, cols: Seq[String])
+      : Observed = {
+    val df = SchemaMemo.read(s, Seq(dataDir))
+    val aggs = aggregates(df.schema, cols)
+    observedFrom(df.schema, cols, df.agg(aggs.head, aggs.tail: _*).head())
+  }
+
+  /** [[reread]] for many directories in ONE grouped aggregation
+    * (grouping on each row's source directory) — the partitioned
+    * insert's and clustering's leaves. A directory the path
+    * normalization failed to match is absent from the result.
+    */
+  def rereadEach(s: SparkSession, dirs: Seq[String], cols: Seq[String])
+      : Map[String, Observed] = {
+    val df = SchemaMemo.read(s, dirs)
+    val aggs = aggregates(df.schema, cols)
+    val wanted = dirs.toSet
+    df.groupBy(regexp_extract(input_file_name(), "^(.*)/[^/]+$", 1))
+      .agg(aggs.head, aggs.tail: _*)
+      .collect() // one row per directory — bounded by `dirs` itself
+      .map(r => new Path(r.getString(0)).toUri.getPath ->
+        observedFrom(df.schema, cols, r, offset = 1))
+      .filter(t => wanted(t._1)).toMap
+  }
+
+  /** Compute min/max for `cols` over the directory's rows by re-reading
+    * it ([[reread]]) and install the sidecar. Call after writing
+    * `dataDir`, before committing it.
+    */
+  def write(s: SparkSession, dataDir: String, cols: Seq[String]): Unit =
+    install(s, dataDir, reread(s, dataDir, cols), cols)
+
+  /** Install the sidecar over `cols` from statistics already observed. */
+  def install(s: SparkSession, dataDir: String, seen: Observed,
+      cols: Seq[String]): Unit =
+    installRendered(s, dataDir, render(seen, cols))
+
+  /** The sidecar body over `cols` of `seen`. */
+  private[graft] def render(seen: Observed, cols: Seq[String]): String =
+    render(seen.rows, cols.map(c => c -> seen.cols(c)._1),
+      cols.map(c => c -> seen.cols(c)._2).toMap)
 
   /** Install a sidecar from ALREADY-COMPUTED statistics — the bulk
     * path for fixtures and foreign writers whose stats fall out of one

@@ -1043,6 +1043,11 @@ class GraftScanBuilder(s: SparkSession, root: String, version: Int,
   * [[GraftRowOpState]] so the operation's write replaces exactly those
   * (the copy-on-write surgery; untouched directories carry verbatim).
   */
+object GraftScan {
+  /** The largest runtime IN-list a scan prunes directories with. */
+  val RuntimePruneMaxValues = 65536
+}
+
 case class GraftScan(delegate: org.apache.spark.sql.execution.datasources
       .v2.parquet.ParquetScan,
     root: String, version: Int, keptDirs: Seq[String],
@@ -1205,8 +1210,7 @@ case class GraftScan(delegate: org.apache.spark.sql.execution.datasources
       // (missing sidecar/column → keep; stats only ever skip IO).
       // A huge runtime key set stops paying for the dirs × values
       // overlap sweep — skip pruning past the cap, never wrong.
-      val cap = session.conf
-        .get("spark.graft.runtimePrune.maxValues", "65536").toInt
+      val cap = GraftScan.RuntimePruneMaxValues
       if (session.conf.get("spark.graft.runtimePrune.debug", "false")
           .toBoolean)
         predicates.foreach(p => System.err.println(

@@ -173,7 +173,10 @@ class GraftStagedTable(s: SparkSession, root: String,
     tableSchema: StructType, props: Map[String, String],
     replaceExisting: Boolean) extends StagedTable with SupportsWrite {
 
-  @volatile private var writtenDir: Option[String] = None
+  /** The directory the write committed, with what it observed. */
+  @volatile private var written: Option[(String, SkipStats.Observed)] =
+    None
+  private val landing = Landing.planFrom(props, Nil, Nil, Map.empty)
 
   override def name(): String = s"graft.`$root`@<staged>"
 
@@ -198,17 +201,21 @@ class GraftStagedTable(s: SparkSession, root: String,
 
         override def toBatch: BatchWrite = new BatchWrite {
           private val db = delegate.toBatch
+          private val observed = landing.observed(info.schema())
           override def createBatchWriterFactory(p: PhysicalWriteInfo) =
-            db.createBatchWriterFactory(p)
+            new ObservingWrites.Factory(db.createBatchWriterFactory(p),
+              info.schema(), observed)
           override def useCommitCoordinator(): Boolean =
             db.useCommitCoordinator()
           override def commit(messages: Array[WriterCommitMessage])
               : Unit = {
-            db.commit(messages) // files final; manifest commit is staged
-            writtenDir = Some(dir)
+            // files final; manifest commit is staged
+            db.commit(messages.map(ObservingWrites.inner))
+            written = Some((dir, ObservingWrites.observed(s,
+              info.schema(), observed, messages.toSeq)))
           }
           override def abort(messages: Array[WriterCommitMessage]): Unit =
-            db.abort(messages)
+            db.abort(messages.map(ObservingWrites.inner))
         }
       }
     }
@@ -216,10 +223,11 @@ class GraftStagedTable(s: SparkSession, root: String,
   override def commitStagedChanges(): Unit = {
     GraftDdl.applyProperties(s, root, props)
     // an all-filtered CTAS wrote no directory; Landing gives the fresh
-    // one a schema-bearing file
-    val dir = writtenDir.getOrElse(
-      s"$root/data/w-" + java.util.UUID.randomUUID().toString)
-    val landing = Landing.planFrom(props, Nil, Nil, Map.empty)
+    // one a schema-bearing file and the sidecars of zero rows
+    val (dir, seen) = written.getOrElse((
+      s"$root/data/w-" + java.util.UUID.randomUUID().toString,
+      ObservingWrites.observed(s, tableSchema,
+        landing.observed(tableSchema), Nil)))
     val partitionCols = Landing.csv(props.get("partitioncols"))
     if (partitionCols.nonEmpty &&
         graft.io.SchemaMemo.schemaOf(s, dir).nonEmpty) {
@@ -236,7 +244,7 @@ class GraftStagedTable(s: SparkSession, root: String,
     // the CTAS result is the constraint's first subject — a violating
     // result aborts with nothing committed (props alone don't make a
     // table; the next CTAS overwrites them)
-    Landing.prepare(s, landing, dir, Some(tableSchema))
+    Landing.prepare(s, landing, dir, Some(seen), Some(tableSchema))
     if (replaceExisting) Manifest.rewrite(s, root, Seq(dir))
     else Manifest.commit(s, root, dir)
   }

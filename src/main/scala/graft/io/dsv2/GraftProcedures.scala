@@ -636,10 +636,14 @@ object GraftProcedures {
         // discipline: the sort columns are explicit stats columns, on
         // top of the table's properties and what the replaced
         // directories carried (maintenance never leaves an unprunable
-        // hole)
+        // hole). One write made every bucket, so their statistics come
+        // from one grouped aggregation over the buckets (an observation
+        // has no groups)
         val landing = Landing.plan(s, root, sortCols,
           colMap = l2p.map(_.swap)).carrying(s, data)
-        newDirs.foreach(Landing.prepare(s, landing, _))
+        val seen = graft.io.SkipStats.rereadEach(s, newDirs,
+          landing.observed(reader.schema))
+        newDirs.foreach(d => Landing.prepare(s, landing, d, seen.get(d)))
         Manifest.replaceDirs(s, root, remove = data.toSet, add = newDirs,
           op = "cluster")
         newDirs.map { d =>

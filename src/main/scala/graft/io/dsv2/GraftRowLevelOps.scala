@@ -288,6 +288,11 @@ class GraftDeltaUpdateWrite(s: SparkSession, root: String,
 
   override def toBatch(): DeltaBatchWrite = new DeltaBatchWrite {
     private val db = delegate.toBatch
+    // the rewritten rows land like any data directory (the tombstone
+    // beside them is a key list, not data); the tasks observe the
+    // columns it lands with
+    private val landing = graft.io.Landing.plan(s, root, colMap = colMap)
+    private val observed = landing.observed(info.schema())
 
     // the parquet file commit protocol coordinates its own task
     // commits — a second (outer) negotiation would authorize a
@@ -297,7 +302,8 @@ class GraftDeltaUpdateWrite(s: SparkSession, root: String,
 
     override def createBatchWriterFactory(pinfo: PhysicalWriteInfo)
         : DeltaWriterFactory =
-      new UpdateRowWriterFactory(db.createBatchWriterFactory(pinfo),
+      new UpdateRowWriterFactory(new ObservingWrites.Factory(
+        db.createBatchWriterFactory(pinfo), info.schema(), observed),
         keyIsString, cap)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -313,16 +319,16 @@ class GraftDeltaUpdateWrite(s: SparkSession, root: String,
           s"spark.graft.dml.maxDeleteKeys=$cap — this is a bulk " +
           "rewrite, not a correction stream: drop the mor key for " +
           "the copy-on-write path (or raise the cap)")
-      db.commit(msgs.map(_.inner)) // finalize the rewritten-row files
+      // finalize the rewritten-row files
+      db.commit(msgs.map(m => ObservingWrites.inner(m.inner)))
       import s.implicits._
       val keys =
         if (keyIsString) msgs.flatMap(_.strings).toSeq.toDF(morKey)
         else msgs.flatMap(_.longs).toSeq.toDF(morKey)
       keys.distinct().write.parquet(tombDir)
-      // the rewritten rows land like any data directory (the tombstone
-      // beside them is a key list, not data)
-      graft.io.Landing.prepare(s, graft.io.Landing.plan(s, root,
-        colMap = colMap), insDir, Some(info.schema()))
+      graft.io.Landing.prepare(s, landing, insDir,
+        Some(ObservingWrites.observed(s, info.schema(), observed,
+          msgs.map(_.inner).toSeq)), Some(info.schema()))
       // conflict-detecting commit: the epoch was pinned at PLAN time,
       // so a concurrent UPDATE can land between this one's plan and
       // commit — the guard re-checks the fresh entry list inside the
@@ -336,7 +342,9 @@ class GraftDeltaUpdateWrite(s: SparkSession, root: String,
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
-      db.abort(messages.collect { case m: UpdateTaskMessage => m.inner })
+      db.abort(messages.collect {
+        case m: UpdateTaskMessage => ObservingWrites.inner(m.inner)
+      })
   }
 
   override def description(): String =

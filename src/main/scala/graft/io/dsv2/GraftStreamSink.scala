@@ -54,11 +54,12 @@ class GraftStreamSink(parameters: Map[String, String]) extends Sink {
     // the sink receives a streaming-tagged plan; re-wrap its rows as a
     // batch frame to write (the file sink's own move)
     val out = org.apache.spark.sql.graftbridge.StreamingBatch.asBatch(data)
-    out.write.mode("overwrite").parquet(dir)
     // properties are read per batch: the table may not exist before
     // the first one
-    Landing.prepare(s, Landing.plan(s, root, opt("statsCols"),
-      opt("bloomCols")), dir)
+    val plan = Landing.plan(s, root, opt("statsCols"), opt("bloomCols"))
+    val seen = Landing.observing(plan, out)(
+      _.write.mode("overwrite").parquet(dir))
+    Landing.prepare(s, plan, dir, Some(seen))
     Manifest.commitIfAbsent(s, root, dir)
   }
 

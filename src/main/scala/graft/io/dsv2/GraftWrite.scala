@@ -62,9 +62,10 @@ trait GraftWriteSupport extends CreatableRelationProvider {
       Landing.csv(parameters.get(k.toLowerCase).orElse(parameters.get(k)))
     def writeAndCommit(replacing: Boolean): Unit = {
       val dir = s"$root/data/w-" + java.util.UUID.randomUUID().toString
-      data.write.parquet(dir)
-      Landing.prepare(s, Landing.plan(s, root, csvParam("statsCols"),
-        csvParam("bloomCols")), dir)
+      val plan = Landing.plan(s, root, csvParam("statsCols"),
+        csvParam("bloomCols"))
+      val seen = Landing.observing(plan, data)(_.write.parquet(dir))
+      Landing.prepare(s, plan, dir, Some(seen))
       if (replacing) Manifest.rewrite(s, root, Seq(dir))
       else Manifest.commit(s, root, dir)
     }
@@ -218,8 +219,19 @@ class GraftV2Write(s: SparkSession, root: String,
   override def toBatch: BatchWrite = new BatchWrite {
     private val db = delegate.toBatch
 
+    // a DML rewrite carries the sidecar columns of the directories it
+    // replaces (a takedown must not leave an unprunable hole); the
+    // runtime group filter has narrowed them by the time the tasks
+    // start, and the tasks observe the columns this plan lands
+    private lazy val plan = landing.carrying(s,
+      if (!fromRowOp) Nil
+      else opState.flatMap(_.replacedDirs).getOrElse(
+        scala.util.Try(Manifest.committed(s, root)).getOrElse(Nil)))
+    private lazy val observed = plan.observed(info.schema())
+
     override def createBatchWriterFactory(pinfo: PhysicalWriteInfo) = {
-      val inner = db.createBatchWriterFactory(pinfo)
+      val inner = new ObservingWrites.Factory(
+        db.createBatchWriterFactory(pinfo), info.schema(), observed)
       // a group-based row-level rewrite (SQL DELETE/UPDATE/MERGE) hands
       // the writer rows prefixed with the __row_operation marker when
       // the operation declares no metadata attributes (Spark applies
@@ -233,7 +245,8 @@ class GraftV2Write(s: SparkSession, root: String,
     override def useCommitCoordinator(): Boolean = db.useCommitCoordinator()
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      db.commit(messages) // finalize task files into the fresh dir
+      // finalize task files into the fresh dir
+      db.commit(messages.map(ObservingWrites.inner))
       // a CoW DML whose runtime group filter matched NOTHING is a
       // no-op: the filtered scan returned zero rows by construction
       // (zero kept partitions), so committing would append an empty
@@ -244,14 +257,8 @@ class GraftV2Write(s: SparkSession, root: String,
       // sweep, like an abort.
       if (fromRowOp &&
           opState.flatMap(_.replacedDirs).exists(_.isEmpty)) return
-      // a DML rewrite carries the sidecar columns of the directories it
-      // replaces (a takedown must not leave an unprunable hole)
-      val replaced =
-        if (!fromRowOp) Nil
-        else opState.flatMap(_.replacedDirs).getOrElse(
-          scala.util.Try(Manifest.committed(s, root)).getOrElse(Nil))
-      Landing.prepare(s, landing.carrying(s, replaced), dir,
-        Some(info.schema()))
+      Landing.prepare(s, plan, dir, Some(ObservingWrites.observed(s,
+        info.schema(), observed, messages.toSeq)), Some(info.schema()))
       opState.flatMap(_.replacedDirs) match {
         // runtime-group-filtered row op: replace exactly the matched
         // directories; everything else carries verbatim
@@ -264,7 +271,8 @@ class GraftV2Write(s: SparkSession, root: String,
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
-      db.abort(messages) // the dir stays an orphan for the sweep
+      // the dir stays an orphan for the sweep
+      db.abort(messages.map(ObservingWrites.inner))
 
     override def toString: String = description()
   }
@@ -296,6 +304,11 @@ class GraftV2Write(s: SparkSession, root: String,
   * evolution).
   */
 object GraftPartitionedWrite {
+
+  /** The most filter bytes the grouped bloom build collects to the
+    * driver before it falls back to per-leaf jobs.
+    */
+  val BloomMaxCollectBytes: Long = 512L * 1024 * 1024
 
   private def shadow(c: String) = "__gp_" + c
 
@@ -375,50 +388,15 @@ object GraftPartitionedWrite {
     * each row's source directory) — a per-leaf [[SkipStats.write]]
     * would be one driver-sequential Spark job per partition value,
     * which at high partition cardinality is the planning-metadata
-    * bottleneck all over again on the WRITE side. Rendering is
-    * identical to `SkipStats.write`'s (`min/max cast to string`,
-    * non-null counts); a leaf the path normalization failed to match
-    * falls back to the per-directory job — never an unprunable hole.
+    * bottleneck all over again on the WRITE side. It groups
+    * [[SkipStats.aggregates]], so the bytes are `SkipStats.write`'s; a
+    * leaf the path normalization failed to match falls back to the
+    * per-directory job — never an unprunable hole.
     */
   private def installLeafStats(s: SparkSession, leaves: Seq[String],
       cols: Seq[String]): (Map[String, String], Map[String, Long]) = {
-    import org.apache.spark.sql.functions._
-    val df0 = graft.io.SchemaMemo.read(s, leaves)
-    val tags = cols.map { c =>
-      val dt = df0.schema(c).dataType
-      c -> SkipStats.typeTagOf(dt).getOrElse(
-        throw new IllegalArgumentException(
-          s"no skip-stats support for column $c of type $dt"))
-    }
-    val df = df0.withColumn("__gdir",
-      expr("regexp_extract(input_file_name(), '^(.*)/[^/]+$', 1)"))
-    val aggs = count(lit(1)).as("_cnt") +: tags.flatMap { case (c, _) =>
-      // statExpr: timestamps aggregate as epoch micros, matching
-      // their stored "long" tag (same normalization as SkipStats.write)
-      val e = SkipStats.statExpr(c, df0.schema(c).dataType)
-      Seq(min(e).cast("string"), max(e).cast("string"),
-        count(col(c)))
-    }
-    val rows = df.groupBy(col("__gdir")).agg(aggs.head, aggs.tail: _*)
-      .collect() // one row per leaf — bounded by the leaf list itself
-    val leafSet = leaves.toSet
-    val rendered = rows.flatMap { r =>
-      val d = new Path(r.getString(0)).toUri.getPath
-      if (!leafSet.contains(d)) None
-      else {
-        val stats = tags.zipWithIndex.map { case ((c, t), i) =>
-          val (mn, mx) =
-            (r.getString(2 + 3 * i), r.getString(3 + 3 * i))
-          val bounds =
-            if (mn != null && mx != null) Some((mn, mx)) else None
-          c -> SkipStats.ColStats(t, bounds)
-        }
-        val nonNull = tags.zipWithIndex.map { case ((c, _), i) =>
-          c -> r.getLong(4 + 3 * i)
-        }.toMap
-        Some((d, SkipStats.render(r.getLong(1), stats, nonNull),
-          r.getLong(1)))
-      }
+    val rendered = SkipStats.rereadEach(s, leaves, cols).toSeq.map {
+      case (d, seen) => (d, SkipStats.render(seen, cols), seen.rows)
     }
     // parallel file installs: the sidecars were all computed by the ONE
     // grouped job above; landing them is latency-bound small IO (one
@@ -441,8 +419,8 @@ object GraftPartitionedWrite {
     * filter capacity is the LARGEST leaf's row count (group buffers
     * must be bit-compatible; small leaves just get a lower fpp), so
     * driver memory for the collected filters is bounded up front —
-    * when the estimate exceeds `spark.graft.bloomSidecar.maxCollectBytes`
-    * (default 512 MB) the whole build falls back to the per-leaf jobs,
+    * when the estimate exceeds [[BloomMaxCollectBytes]] (512 MB) the
+    * whole build falls back to the per-leaf jobs,
     * as does any leaf the path normalization failed to match. Returns
     * each leaf's INSTALLED coverage — the columns whose filter
     * actually landed in its sidecar — so the commit seeds annotations
@@ -461,9 +439,8 @@ object GraftPartitionedWrite {
     // meant to cap driver memory
     val bitsPer = math.ceil(-expectedItems.toDouble * math.log(fpp) /
       (math.log(2) * math.log(2))).toLong
-    val maxBytes = s.conf
-      .get("spark.graft.bloomSidecar.maxCollectBytes", "536870912").toLong
-    if (bitsPer / 8 * leaves.size.toLong * cols.size > maxBytes) {
+    if (bitsPer / 8 * leaves.size.toLong * cols.size >
+        BloomMaxCollectBytes) {
       leaves.foreach(d => Landing.sidecars(s, d, (Nil, cols)))
       return leaves.map(_ -> cols).toMap
     }

@@ -5553,8 +5553,8 @@ object OpsQueries {
       // before — same four versions, same per-dir blooms
       writeBatches(s, root, li, pmod(col("l_orderkey"), lit(4)), 4)
         .foreach { d =>
-          graft.io.SkipStats.write(s, d, Seq("l_orderkey"))
-          graft.io.BloomSidecar.write(s, d, Seq("l_orderkey"))
+          graft.io.Landing.sidecars(s, d,
+            (Seq("l_orderkey"), Seq("l_orderkey")))
           Manifest.commit(s, root, d)
         }
     } finally s.conf.unset("spark.graft.bloomSidecar.fpp")

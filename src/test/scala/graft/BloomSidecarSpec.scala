@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.io.{BloomSidecar, Manifest, MergeOnRead, SkipStats}
+import graft.io.{BloomSidecar, Landing, Manifest, MergeOnRead, SkipStats}
 
 /** [[graft.io.BloomSidecar]] — point-membership sidecars: roundtrip for
   * long and string columns, the no-false-negative contract (the only
@@ -25,7 +25,7 @@ class BloomSidecarSpec extends AnyFunSuite {
     (0L until 5000L)
       .map(i => (i * 3, s"key-${i * 3}", Option.empty[String]))
       .toDF("id", "name", "unset").write.parquet(dir)
-    BloomSidecar.write(spark, dir, Seq("id", "name", "unset"))
+    Landing.sidecars(spark, dir, (Nil, Seq("id", "name", "unset")))
     val f = new Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val m = BloomSidecar.read(f, dir).get
@@ -53,7 +53,7 @@ class BloomSidecarSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = tmp() + "/d1"
     (0L until 10L).map(i => Tuple1(i)).toDF("id").write.parquet(dir)
-    BloomSidecar.write(spark, dir, Seq("id"))
+    Landing.sidecars(spark, dir, (Nil, Seq("id")))
     val f = new Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = f.create(new Path(dir, "_bloom"), true)
@@ -67,8 +67,7 @@ class BloomSidecarSpec extends AnyFunSuite {
     val root = tmp() + "/tbl"
     val d0 = s"$root/data/b0"
     (0L until 1000L).map(i => (i, i)).toDF("id", "v").write.parquet(d0)
-    SkipStats.write(spark, d0, Seq("id"))
-    BloomSidecar.write(spark, d0, Seq("id"))
+    Landing.sidecars(spark, d0, (Seq("id"), Seq("id")))
     Manifest.commit(spark, root, d0)
     MergeOnRead.deleteWhere(spark, root, "id", col("id") < 100,
       s"$root/data")

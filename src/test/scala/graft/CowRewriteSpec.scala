@@ -54,7 +54,7 @@ class CowRewriteSpec extends AnyFunSuite {
     val d = s"$base/src"
     (0L until 10L).map(k => (k, s"v$k")).toDF("k", "v")
       .coalesce(1).write.parquet(d)
-    BloomSidecar.write(spark, d, Seq("k", "v"))
+    Landing.sidecars(spark, d, (Nil, Seq("k", "v")))
     val Seq(out) = Cow.rewrite(spark, Landing.plan(spark, base), Seq(d),
       s"$base/stage", "cow", 1, _.filter(lit(false)))
     assert(spark.read.parquet(out).count() == 0)

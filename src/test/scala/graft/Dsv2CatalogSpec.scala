@@ -1310,7 +1310,7 @@ class Dsv2CatalogSpec extends AnyFunSuite {
         val d = s"$root/data/b$b"
         (0L until 400L).filter(_ % 4 == b).map(i => (i, i % 13))
           .toDF("k", "v").write.parquet(d)
-        graft.io.BloomSidecar.write(spark, d, Seq("k"))
+        graft.io.Landing.sidecars(spark, d, (Nil, Seq("k")))
         Manifest.commit(spark, root, d)
       }
     } finally spark.conf.unset("spark.graft.bloomSidecar.fpp")
@@ -1484,26 +1484,9 @@ class Dsv2CatalogSpec extends AnyFunSuite {
         "'statsCols'='k', 'bloomCols'='k')")
       spark.sql(s"SELECT id AS k, id % $parts AS p FROM range(0, 2000)")
         .createOrReplaceTempView(s"src_$name")
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
+      val jobs = SparkJobs.during(spark) {
         spark.sql(s"INSERT INTO lake.$name SELECT * FROM src_$name")
-        // listener events post asynchronously: wait until the count is
-        // stable across consecutive polls (bounded)
-        var last = -1
-        var stable = 0
-        var waited = 0
-        while (stable < 3 && waited < 50) {
-          Thread.sleep(100); waited += 1
-          if (jobs.get() == last) stable += 1
-          else { last = jobs.get(); stable = 0 }
-        }
-      } finally spark.sparkContext.removeSparkListener(l)
+      }
       // the CREATE committed a schema-bearing empty dir; the INSERT's
       // partition leaves are the `=`-named ones
       val leaves = Manifest.committed(spark, root).filter(_.contains("="))
@@ -1526,7 +1509,7 @@ class Dsv2CatalogSpec extends AnyFunSuite {
         assert(graft.io.BloomSidecar.readKeys(f, d)
           .exists(_.contains("k")))
       }
-      jobs.get()
+      jobs
     }
     val j4 = insertJobs(4)
     val j16 = insertJobs(16)

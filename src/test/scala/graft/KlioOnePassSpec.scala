@@ -98,40 +98,13 @@ class KlioOnePassSpec extends AnyFunSuite {
     m.copy(payload = s"done:${m.element}")
   }
 
-  /** Spark jobs started while `body` runs, counted up to a sentinel
-    * query run after it (the listener bus delivers job starts in order;
-    * the sentinel's own jobs carry its job group).
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup("onepass-sentinel", "sentinel")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!groups.contains("onepass-sentinel") &&
-          System.currentTimeMillis() < deadline) Thread.sleep(20)
-    } finally sc.removeSparkListener(listener)
-    assert(groups.contains("onepass-sentinel"))
-    groups.toArray.count(_ != "onepass-sentinel")
-  }
-
   test("one run is the write plus one broadcast per listing") {
     val (_, cfg) = setup(outputs = 1)
     val calls = spark.sparkContext.longAccumulator("onepass.jobs")
     // warm: the first run of a session may plan extra work once
     KlioPipeline.run(spark, cfg, transform(calls))
     var summary: KlioPipeline.RunSummary = null
-    val jobs = jobsDuring {
+    val jobs = SparkJobs.during(spark) {
       summary = KlioPipeline.run(spark, cfg, transform(calls))
     }
     assert(jobs <= 3, s"$jobs jobs for one run")

@@ -22,32 +22,6 @@ class LandingSpec extends AnyFunSuite {
   private def fsOf(d: String) =
     new Path(d).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Spark jobs started while `body` runs, counted up to a sentinel job
-    * run after it (the listener bus delivers job starts in order).
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup("landing-sentinel", "sentinel")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!groups.contains("landing-sentinel") &&
-          System.currentTimeMillis() < deadline) Thread.sleep(20)
-    } finally sc.removeSparkListener(listener)
-    assert(groups.contains("landing-sentinel"))
-    groups.size - 1
-  }
-
   test("the rule: explicit ∪ property ∪ replaced, mapped to physical " +
       "names, cut to columns the directory has at a supported type") {
     import spark.implicits._
@@ -57,8 +31,7 @@ class LandingSpec extends AnyFunSuite {
     val old = s"$root/data/old"
     Seq((1L, "a", 1.5, "x")).toDF("p_k", "name", "score", "tag")
       .write.parquet(old)
-    SkipStats.write(spark, old, Seq("score"))
-    BloomSidecar.write(spark, old, Seq("tag"))
+    Landing.sidecars(spark, old, (Seq("score"), Seq("tag")))
     // `k` is the logical name of physical `p_k`; `arr` has no sidecar
     // type and `gone` is not in the landed directory
     val plan = Landing.plan(spark, root, stats = Seq("arr"),
@@ -66,7 +39,7 @@ class LandingSpec extends AnyFunSuite {
     val dir = s"$root/data/new"
     Seq((2L, "b", 2.5, "y", Seq(1))).toDF("p_k", "name", "score", "tag",
       "arr").write.parquet(dir)
-    Landing.prepare(spark, plan, dir)
+    Landing.prepare(spark, plan, dir, None)
     val f = fsOf(dir)
     assert(SkipStats.read(f, dir).map(_.keySet) ===
       Some(Set("p_k", "score")))
@@ -81,12 +54,16 @@ class LandingSpec extends AnyFunSuite {
     val plan = Landing.plan(spark, root, Seq("k", "v"), Seq("k", "v"))
     val computed = s"$root/data/computed"
     Seq((1L, "a")).toDF("k", "v").filter(lit(false)).write.parquet(computed)
-    Landing.prepare(spark, plan, computed)
+    Landing.prepare(spark, plan, computed, None)
     val dir = s"$root/data/landed"
-    val landingJobs = jobsDuring(Landing.prepare(spark, plan, dir,
-      Some(schema)))
-    val schemaFileJobs = jobsDuring(Landing.schemaFile(spark,
-      s"$root/data/bare", schema))
+    // what a DSv2 write whose tasks produced nothing observed
+    val none = graft.io.dsv2.ObservingWrites.observed(spark, schema,
+      plan.observed(schema), Nil)
+    val landingJobs = graft.SparkJobs.during(spark)(Landing.prepare(
+      spark, plan, dir, Some(none), Some(schema)))
+    val schemaFileJobs = graft.SparkJobs.during(spark)(Landing.schemaFile(
+      spark, s"$root/data/bare", schema))
+    assert(schemaFileJobs === 1)
     assert(landingJobs === schemaFileJobs,
       "writing the schema file must be the landing's only Spark work")
     assert(spark.read.parquet(dir).schema === spark.read.parquet(computed)
