@@ -1,5 +1,7 @@
 package graft.functions
 
+import java.util.concurrent.ConcurrentHashMap
+
 /** Pure-Scala DSP kernels backing the audio operator surface (reference
   * `audio/src/klio_audio/transforms/audio.py`, which delegates to librosa —
   * no JVM equivalent exists offline, so these are from-scratch
@@ -8,76 +10,200 @@ package graft.functions
   * Semantics follow librosa defaults where the reference uses them:
   * hann window, centered frames with reflect padding, slaney mel scale,
   * orthonormal DCT-II for MFCC.
+  *
+  * Plans (FFTW's plan-then-execute split): every constant a kernel derives
+  * from its shape alone is built once per shape and then shared read-only
+  * across threads — the Hann window per `nFft`; the FFT's bit-reversal swap
+  * list and per-stage twiddles per length; the slaney filterbank per
+  * `(sr, nFft, nMels, fMin, fMax)`; the DCT-II cosine table per
+  * `(nMfcc, nMels)`. One map keeps at most [[MaxPlans]] of them, holding at
+  * most [[MaxPlanDoubles]] doubles together. A shape past either bound is
+  * planned on each call and not kept, so a UDF whose `sr` varies per row
+  * cannot grow the map. The kernels themselves are `while` loops over
+  * primitive arrays; one STFT call reuses one re/im scratch pair across its
+  * frames. Public results are always fresh arrays the caller may mutate.
+  *
+  * Bit identity: a plan holds exactly the doubles the kernels used to
+  * compute per call (the twiddles come from the butterfly loop's own
+  * `cr`/`ci` recurrence), and every sum and running max keeps its order, so
+  * each output is bit-for-bit what the unplanned kernels gave.
+  * `DspPlanSpec` checks this against a verbatim copy of those kernels.
   */
 object Dsp {
 
-  /** In-place iterative radix-2 Cooley–Tukey FFT. Lengths must be powers
-    * of two.
+  /** Most shapes the plan map keeps. */
+  val MaxPlans = 64
+
+  /** Most doubles the kept plans hold together (32 MB). */
+  val MaxPlanDoubles: Long = 4L << 20
+
+  private sealed trait Shape
+  private final case class WindowShape(n: Int) extends Shape
+  private final case class FftShape(n: Int) extends Shape
+  // doubles keyed by their raw bits: NaN equals itself, -0.0 is not 0.0
+  private final case class MelShape(sr: Long, nFft: Int, nMels: Int,
+      fMin: Long, fMaxOpt: Long) extends Shape
+  private final case class DctShape(nMfcc: Int, n: Int) extends Shape
+
+  private sealed trait Plan { def doubles: Long }
+  private final class Table(val v: Array[Double]) extends Plan {
+    def doubles: Long = v.length.toLong
+  }
+  /** `swaps`: the bit-reversal transpositions as (i, j) pairs. Stage `half`
+    * (butterflies `half` apart) reads its twiddles at `half - 1 + k`.
     */
-  def fft(re: Array[Double], im: Array[Double]): Unit = {
-    val n = re.length
-    require(n == im.length && (n & (n - 1)) == 0,
-      s"FFT length must be a power of two, got $n")
-    // bit reversal
-    var i = 1
-    var j = 0
-    while (i < n) {
-      var bit = n >> 1
-      while ((j & bit) != 0) { j ^= bit; bit >>= 1 }
-      j |= bit
-      if (i < j) {
-        val tr = re(i); re(i) = re(j); re(j) = tr
-        val ti = im(i); im(i) = im(j); im(j) = ti
+  private final class FftPlan(val swaps: Array[Int], val twRe: Array[Double],
+      val twIm: Array[Double]) extends Plan {
+    def doubles: Long = 2L * twRe.length + swaps.length / 2
+  }
+
+  private val plans = new ConcurrentHashMap[Shape, Plan]()
+  private var keptDoubles = 0L // guarded by `plans`
+
+  private def planned[P <: Plan](shape: Shape)(build: => P): P = {
+    val hit = plans.get(shape)
+    if (hit != null) return hit.asInstanceOf[P]
+    val p = build
+    plans.synchronized {
+      val raced = plans.get(shape)
+      if (raced != null) raced.asInstanceOf[P]
+      else {
+        if (plans.size < MaxPlans && keptDoubles + p.doubles <= MaxPlanDoubles) {
+          plans.put(shape, p)
+          keptDoubles += p.doubles
+        }
+        p
       }
-      i += 1
     }
-    var len = 2
-    while (len <= n) {
-      val ang = -2.0 * math.Pi / len
-      val wr = math.cos(ang)
-      val wi = math.sin(ang)
-      var blockStart = 0
-      while (blockStart < n) {
+  }
+
+  /** Shapes the plan map holds now (at most [[MaxPlans]]). */
+  private[graft] def plannedShapes: Int = plans.size
+
+  private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  private def fftPlan(n: Int): FftPlan = {
+    require((n & (n - 1)) == 0, s"FFT length must be a power of two, got $n")
+    planned(FftShape(n)) {
+      val swaps = Array.newBuilder[Int]
+      var i = 1
+      var j = 0
+      while (i < n) {
+        var bit = n >> 1
+        while ((j & bit) != 0) { j ^= bit; bit >>= 1 }
+        j |= bit
+        if (i < j) { swaps += i; swaps += j }
+        i += 1
+      }
+      val twRe = new Array[Double](math.max(0, n - 1))
+      val twIm = new Array[Double](twRe.length)
+      var len = 2
+      while (len <= n) {
+        val ang = -2.0 * math.Pi / len
+        val wr = math.cos(ang)
+        val wi = math.sin(ang)
+        val half = len / 2
         var cr = 1.0
         var ci = 0.0
         var k = 0
-        while (k < len / 2) {
+        while (k < half) {
+          twRe(half - 1 + k) = cr
+          twIm(half - 1 + k) = ci
+          val ncr = cr * wr - ci * wi
+          ci = cr * wi + ci * wr
+          cr = ncr
+          k += 1
+        }
+        len <<= 1
+      }
+      new FftPlan(swaps.result(), twRe, twIm)
+    }
+  }
+
+  private def transform(re: Array[Double], im: Array[Double], p: FftPlan)
+      : Unit = {
+    val n = re.length
+    val swaps = p.swaps
+    var s = 0
+    while (s < swaps.length) {
+      val i = swaps(s)
+      val j = swaps(s + 1)
+      val tr = re(i); re(i) = re(j); re(j) = tr
+      val ti = im(i); im(i) = im(j); im(j) = ti
+      s += 2
+    }
+    val twRe = p.twRe
+    val twIm = p.twIm
+    var half = 1
+    while (half < n) {
+      val len = half << 1
+      var blockStart = 0
+      while (blockStart < n) {
+        var k = 0
+        while (k < half) {
+          val cr = twRe(half - 1 + k)
+          val ci = twIm(half - 1 + k)
           val i0 = blockStart + k
-          val i1 = i0 + len / 2
+          val i1 = i0 + half
           val xr = re(i1) * cr - im(i1) * ci
           val xi = re(i1) * ci + im(i1) * cr
           re(i1) = re(i0) - xr
           im(i1) = im(i0) - xi
           re(i0) += xr
           im(i0) += xi
-          val ncr = cr * wr - ci * wi
-          ci = cr * wi + ci * wr
-          cr = ncr
           k += 1
         }
         blockStart += len
       }
-      len <<= 1
+      half = len
     }
   }
 
+  /** In-place iterative radix-2 Cooley–Tukey FFT. Lengths must be powers
+    * of two.
+    */
+  def fft(re: Array[Double], im: Array[Double]): Unit = {
+    val n = re.length
+    require(n == im.length, s"FFT length must be a power of two, got $n")
+    transform(re, im, fftPlan(n))
+  }
+
+  private def window(n: Int): Array[Double] =
+    planned(WindowShape(n)) {
+      val w = new Array[Double](math.max(0, n))
+      var i = 0
+      while (i < w.length) {
+        w(i) = 0.5 - 0.5 * math.cos(2.0 * math.Pi * i / n)
+        i += 1
+      }
+      new Table(w)
+    }.v
+
   /** Periodic Hann window (librosa/scipy default for STFT). */
-  def hann(n: Int): Array[Double] =
-    Array.tabulate(n)(i => 0.5 - 0.5 * math.cos(2.0 * math.Pi * i / n))
+  def hann(n: Int): Array[Double] = window(n).clone()
 
   /** Reflect-pad `y` by `pad` samples on both sides (librosa center mode). */
   def reflectPad(y: Array[Double], pad: Int): Array[Double] = {
     val n = y.length
     require(n > 1, "cannot reflect-pad a signal shorter than 2 samples")
-    Array.tabulate(n + 2 * pad) { i =>
+    val out = new Array[Double](math.max(0, n + 2 * pad))
+    var i = 0
+    while (i < out.length) {
       var k = i - pad
-      // reflect without repeating the edge sample
-      while (k < 0 || k >= n) {
-        if (k < 0) k = -k
-        if (k >= n) k = 2 * (n - 1) - k
+      if (k == 0 && out.length - i >= n) { // the signal itself
+        System.arraycopy(y, 0, out, i, n)
+        i += n
+      } else {
+        // reflect without repeating the edge sample
+        while (k < 0 || k >= n) {
+          if (k < 0) k = -k
+          if (k >= n) k = 2 * (n - 1) - k
+        }
+        out(i) = y(k)
+        i += 1
       }
-      y(k)
     }
+    out
   }
 
   /** Magnitude STFT: frames of `nFft` every `hop` samples, hann-windowed,
@@ -88,44 +214,92 @@ object Dsp {
   def stftMag(y: Array[Double], nFft: Int = 1024, hop: Int = 256)
       : Array[Array[Double]] = {
     if (y.length < 2) return Array.empty // too short to reflect-pad/frame
-    val w = hann(nFft)
+    val w = window(nFft)
     val padded = reflectPad(y, nFft / 2)
     val nFrames = 1 + (padded.length - nFft) / hop
     val nBins = nFft / 2 + 1
-    Array.tabulate(nFrames) { f =>
-      val re = new Array[Double](nFft)
-      val im = new Array[Double](nFft)
+    val out = new Array[Array[Double]](math.max(0, nFrames))
+    if (out.isEmpty) return out
+    val re = new Array[Double](nFft)
+    val im = new Array[Double](nFft)
+    val plan = fftPlan(nFft)
+    var f = 0
+    while (f < out.length) {
+      val start = f * hop
       var i = 0
-      while (i < nFft) { re(i) = padded(f * hop + i) * w(i); i += 1 }
-      fft(re, im)
-      Array.tabulate(nBins)(b => math.hypot(re(b), im(b)))
+      while (i < nFft) { re(i) = padded(start + i) * w(i); i += 1 }
+      java.util.Arrays.fill(im, 0.0)
+      transform(re, im, plan)
+      val mag = new Array[Double](nBins)
+      var b = 0
+      while (b < nBins) { mag(b) = math.hypot(re(b), im(b)); b += 1 }
+      out(f) = mag
+      f += 1
     }
+    out
+  }
+
+  /** The largest value in `s`, or `default` when it holds none:
+    * `s.flatten.maxOption.getOrElse(default)` unboxed, so under
+    * `Ordering.Double.TotalOrdering` (NaN above +∞, 0.0 above -0.0).
+    */
+  private def maxOrElse(s: Array[Array[Double]], default: Double): Double = {
+    var seen = false
+    var m = default
+    var r = 0
+    while (r < s.length) {
+      val row = s(r)
+      var i = 0
+      while (i < row.length) {
+        val v = row(i)
+        if (!seen) { m = v; seen = true }
+        else if (java.lang.Double.compare(m, v) < 0) m = v
+        i += 1
+      }
+      r += 1
+    }
+    m
+  }
+
+  /** `scale` · log10(max(amin, v) / ref), ref = max(amin, max(s)), then
+    * floored at `topDb` below the peak.
+    */
+  private def toDb(s: Array[Array[Double]], topDb: Double, amin: Double,
+      scale: Double): Array[Array[Double]] = {
+    val ref = math.max(amin, maxOrElse(s, amin))
+    val db = new Array[Array[Double]](s.length)
+    var r = 0
+    while (r < s.length) {
+      val row = s(r)
+      val out = new Array[Double](row.length)
+      var i = 0
+      while (i < row.length) {
+        out(i) = scale * math.log10(math.max(amin, row(i)) / ref)
+        i += 1
+      }
+      db(r) = out
+      r += 1
+    }
+    val floor = maxOrElse(db, 0.0) - topDb
+    r = 0
+    while (r < db.length) {
+      val row = db(r)
+      var i = 0
+      while (i < row.length) { row(i) = math.max(row(i), floor); i += 1 }
+      r += 1
+    }
+    db
   }
 
   /** amplitude_to_db with ref = max (GetSpec parity, audio.py:135-187):
     * 20 log10(S/ref) clamped at amin=1e-5 and top_db=80.
     */
   def amplitudeToDb(s: Array[Array[Double]], topDb: Double = 80.0)
-      : Array[Array[Double]] = {
-    val amin = 1e-5
-    val ref = math.max(amin, s.iterator.flatMap(_.iterator).maxOption
-      .getOrElse(amin))
-    val db = s.map(_.map(v =>
-      20.0 * math.log10(math.max(amin, v) / ref)))
-    val peak = db.iterator.flatMap(_.iterator).maxOption.getOrElse(0.0)
-    db.map(_.map(v => math.max(v, peak - topDb)))
-  }
+      : Array[Array[Double]] = toDb(s, topDb, 1e-5, 20.0)
 
   /** power_to_db: 10 log10, same clamping (GetMFCC path, audio.py:247-305). */
   def powerToDb(s: Array[Array[Double]], topDb: Double = 80.0)
-      : Array[Array[Double]] = {
-    val amin = 1e-10
-    val ref = math.max(amin, s.iterator.flatMap(_.iterator).maxOption
-      .getOrElse(amin))
-    val db = s.map(_.map(v => 10.0 * math.log10(math.max(amin, v) / ref)))
-    val peak = db.iterator.flatMap(_.iterator).maxOption.getOrElse(0.0)
-    db.map(_.map(v => math.max(v, peak - topDb)))
-  }
+      : Array[Array[Double]] = toDb(s, topDb, 1e-10, 10.0)
 
   private def hzToMel(hz: Double): Double = {
     // slaney scale: linear below 1 kHz, log above
@@ -145,24 +319,50 @@ object Dsp {
     else minLogHz * math.exp(logStep * (mel - minLogMel))
   }
 
+  /** The filterbank row-major: filter m is `(m·nBins until (m+1)·nBins)`. */
+  private def melTable(sr: Double, nFft: Int, nMels: Int, fMin: Double,
+      fMaxOpt: Double): Array[Double] =
+    planned(MelShape(bits(sr), nFft, nMels, bits(fMin), bits(fMaxOpt))) {
+      val fMax = if (fMaxOpt > 0) fMaxOpt else sr / 2.0
+      val nBins = math.max(0, nFft / 2 + 1)
+      val binHz = new Array[Double](nBins)
+      var b = 0
+      while (b < nBins) { binHz(b) = b * sr / nFft; b += 1 }
+      val melMin = hzToMel(fMin)
+      val melMax = hzToMel(fMax)
+      val melPts = new Array[Double](math.max(0, nMels + 2))
+      var i = 0
+      while (i < melPts.length) {
+        melPts(i) = melToHz(melMin + (melMax - melMin) * i / (nMels + 1))
+        i += 1
+      }
+      val fb = new Array[Double](math.max(0, nMels) * nBins)
+      var m = 0
+      while (m < nMels) {
+        val lo = melPts(m)
+        val mid = melPts(m + 1)
+        val hi = melPts(m + 2)
+        val norm = 2.0 / (hi - lo) // slaney area normalization
+        b = 0
+        while (b < nBins) {
+          val f = binHz(b)
+          val up = (f - lo) / (mid - lo)
+          val down = (hi - f) / (hi - mid)
+          fb(m * nBins + b) = math.max(0.0, math.min(up, down)) * norm
+          b += 1
+        }
+        m += 1
+      }
+      new Table(fb)
+    }.v
+
   /** Slaney-normalized triangular mel filterbank: nMels x (nFft/2+1). */
   def melFilterbank(sr: Double, nFft: Int, nMels: Int = 32,
       fMin: Double = 0.0, fMaxOpt: Double = -1.0): Array[Array[Double]] = {
-    val fMax = if (fMaxOpt > 0) fMaxOpt else sr / 2.0
-    val nBins = nFft / 2 + 1
-    val binHz = Array.tabulate(nBins)(b => b * sr / nFft)
-    val melPts = Array.tabulate(nMels + 2)(i =>
-      melToHz(hzToMel(fMin) + (hzToMel(fMax) - hzToMel(fMin)) * i / (nMels + 1)))
-    Array.tabulate(nMels) { m =>
-      val (lo, mid, hi) = (melPts(m), melPts(m + 1), melPts(m + 2))
-      val norm = 2.0 / (hi - lo) // slaney area normalization
-      Array.tabulate(nBins) { b =>
-        val f = binHz(b)
-        val up = (f - lo) / (mid - lo)
-        val down = (hi - f) / (hi - mid)
-        math.max(0.0, math.min(up, down)) * norm
-      }
-    }
+    val fb = melTable(sr, nFft, nMels, fMin, fMaxOpt)
+    val nBins = math.max(0, nFft / 2 + 1)
+    Array.tabulate(nMels)(m =>
+      java.util.Arrays.copyOfRange(fb, m * nBins, (m + 1) * nBins))
   }
 
   /** Mel power spectrogram: filterbank × |STFT|², frame-major nMels columns
@@ -171,36 +371,74 @@ object Dsp {
   def melSpectrogram(y: Array[Double], sr: Double, nFft: Int = 1024,
       hop: Int = 256, nMels: Int = 32): Array[Array[Double]] = {
     val mag = stftMag(y, nFft, hop)
-    val fb = melFilterbank(sr, nFft, nMels)
-    mag.map { frame =>
-      val power = frame.map(v => v * v)
-      fb.map { filt =>
+    if (mag.isEmpty) return mag
+    val fb = melTable(sr, nFft, nMels, 0.0, -1.0)
+    val nBins = nFft / 2 + 1
+    val power = new Array[Double](nBins)
+    val out = new Array[Array[Double]](mag.length)
+    var f = 0
+    while (f < mag.length) {
+      val frame = mag(f)
+      var b = 0
+      while (b < nBins) { power(b) = frame(b) * frame(b); b += 1 }
+      val mel = new Array[Double](math.max(0, nMels))
+      var m = 0
+      while (m < mel.length) {
+        val base = m * nBins
         var s = 0.0
-        var b = 0
-        while (b < filt.length) { s += filt(b) * power(b); b += 1 }
-        s
+        b = 0
+        while (b < nBins) { s += fb(base + b) * power(b); b += 1 }
+        mel(m) = s
+        m += 1
       }
+      out(f) = mel
+      f += 1
     }
+    out
   }
+
+  /** cos(π·k·(2i+1) / 2n) at `k·n + i`: the DCT-II basis, row k. */
+  private def dctTable(nMfcc: Int, n: Int): Array[Double] =
+    planned(DctShape(nMfcc, n)) {
+      val t = new Array[Double](math.max(0, nMfcc) * n)
+      var k = 0
+      while (k < nMfcc) {
+        var i = 0
+        while (i < n) {
+          t(k * n + i) = math.cos(math.Pi * k * (2 * i + 1) / (2.0 * n))
+          i += 1
+        }
+        k += 1
+      }
+      new Table(t)
+    }.v
 
   /** Orthonormal DCT-II over the mel axis → MFCCs (audio.py:247-305). */
   def mfcc(y: Array[Double], sr: Double, nMfcc: Int = 13, nFft: Int = 1024,
       hop: Int = 256, nMels: Int = 32): Array[Array[Double]] = {
     val melDb = powerToDb(melSpectrogram(y, sr, nFft, hop, nMels))
-    melDb.map { frame =>
-      val n = frame.length
-      Array.tabulate(nMfcc) { k =>
+    if (melDb.isEmpty) return melDb
+    val n = melDb(0).length // every frame holds nMels values
+    val cos = dctTable(nMfcc, n)
+    val scale0 = math.sqrt(1.0 / n)
+    val scale = math.sqrt(2.0 / n)
+    val out = new Array[Array[Double]](melDb.length)
+    var f = 0
+    while (f < melDb.length) {
+      val frame = melDb(f)
+      val c = new Array[Double](math.max(0, nMfcc))
+      var k = 0
+      while (k < c.length) {
         var s = 0.0
         var i = 0
-        while (i < n) {
-          s += frame(i) * math.cos(math.Pi * k * (2 * i + 1) / (2.0 * n))
-          i += 1
-        }
-        val scale =
-          if (k == 0) math.sqrt(1.0 / n) else math.sqrt(2.0 / n)
-        s * scale
+        while (i < n) { s += frame(i) * cos(k * n + i); i += 1 }
+        c(k) = s * (if (k == 0) scale0 else scale)
+        k += 1
       }
+      out(f) = c
+      f += 1
     }
+    out
   }
 
   /** softmask(X, Xref, power): X^p / (X^p + Xref^p), 0.5 where both zero
@@ -288,10 +526,6 @@ object Dsp {
     out
   }
 
-  /** Minimal RIFF/WAVE PCM16 mono decode → [-1, 1] doubles (LoadAudio
-    * stand-in, audio/io.py:28-111 + audio.py:26-73; OGG needs a codec the
-    * container lacks — binary plumbing for it lives in graft.multimodal).
-    */
   /** Landmark-style audio fingerprint (the Shazam construction's
     * constellation idea reduced to its exactly-testable core): per-frame
     * DOMINANT spectral peak → STABLE runs (the same argmax bin across
@@ -329,6 +563,10 @@ object Dsp {
       .toArray.distinct.sorted
   }
 
+  /** Minimal RIFF/WAVE PCM16 mono decode → [-1, 1] doubles (LoadAudio
+    * stand-in, audio/io.py:28-111 + audio.py:26-73; OGG needs a codec the
+    * container lacks — binary plumbing for it lives in graft.multimodal).
+    */
   def decodeWavPcm16(bytes: Array[Byte]): (Array[Double], Int) = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -359,8 +597,9 @@ object Dsp {
       s"corrupt WAV: data chunk ($dataLen bytes at $dataStart) exceeds " +
         s"file length ${bytes.length}")
     val n = dataLen / 2
-    val out = Array.tabulate(n)(i =>
-      bb.getShort(dataStart + 2 * i) / 32768.0)
+    val out = new Array[Double](n)
+    var i = 0
+    while (i < n) { out(i) = bb.getShort(dataStart + 2 * i) / 32768.0; i += 1 }
     (out, sampleRate)
   }
 

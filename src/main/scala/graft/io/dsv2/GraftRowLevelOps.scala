@@ -15,6 +15,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.io.MergeOnRead
 
+object GraftRowLevelOps {
+  /** Most keys one SQL DELETE or UPDATE on a mor-keyed table may match. */
+  val MaxDeleteKeys: Long = 4194304L
+
+  private[dsv2] val CapName = s"GraftRowLevelOps.MaxDeleteKeys=$MaxDeleteKeys"
+}
+
 /** SQL row-level DML on manifest tables — `DELETE FROM` / `UPDATE` /
   * `MERGE INTO` against a [[GraftCatalog]] table, planned through Spark
   * 4's native `SupportsRowLevelOperations` hooks so takedowns and
@@ -62,10 +69,9 @@ import graft.io.MergeOnRead
   *
   * Scale note: the delta DELETE funnels matched keys through driver
   * commit messages — right for the takedown shape (keys-sized), wrong
-  * for a bulk purge, so past `spark.graft.dml.maxDeleteKeys` (default
-  * 4M, aligned with the MoR broadcast cap) it refuses loudly and points
-  * at the CoW path (drop the mor key) which streams instead of
-  * collecting.
+  * for a bulk purge, so past [[GraftRowLevelOps.MaxDeleteKeys]] (4M,
+  * aligned with the MoR broadcast cap) it refuses loudly and points at
+  * the CoW path (drop the mor key) which streams instead of collecting.
   */
 class GraftRowLevelBuilder(s: SparkSession, root: String, version: Int,
     tableSchema: StructType, dataDirs: Seq[String], tombDirs: Seq[String],
@@ -193,9 +199,7 @@ class GraftDeltaDelete(s: SparkSession, root: String, version: Int,
           s"mor key '$morKey' must be bigint or string for SQL DELETE, " +
             s"got $other")
       }
-      val cap =
-        s.conf.get("spark.graft.dml.maxDeleteKeys", "4194304").toLong
-      new GraftDeltaDeleteWrite(s, root, morKey, keyIsString, cap)
+      new GraftDeltaDeleteWrite(s, root, morKey, keyIsString)
     }
   }
 
@@ -243,9 +247,7 @@ class GraftDeltaUpdate(s: SparkSession, root: String, version: Int,
           s"mor key '$morKey' must be bigint or string for SQL " +
             s"UPDATE, got $other")
       }
-      val cap =
-        s.conf.get("spark.graft.dml.maxDeleteKeys", "4194304").toLong
-      new GraftDeltaUpdateWrite(s, root, morKey, keyIsString, cap,
+      new GraftDeltaUpdateWrite(s, root, morKey, keyIsString,
         dataDirs ++ tombDirs, winfo, colMap)
     }
   }
@@ -259,7 +261,7 @@ private case class UpdateTaskMessage(longs: Array[Long],
   extends WriterCommitMessage
 
 class GraftDeltaUpdateWrite(s: SparkSession, root: String,
-    morKey: String, keyIsString: Boolean, cap: Long,
+    morKey: String, keyIsString: Boolean,
     entries: Seq[String], logicalInfo: LogicalWriteInfo,
     colMap: Map[String, String]) extends DeltaWrite {
 
@@ -304,7 +306,7 @@ class GraftDeltaUpdateWrite(s: SparkSession, root: String,
         : DeltaWriterFactory =
       new UpdateRowWriterFactory(new ObservingWrites.Factory(
         db.createBatchWriterFactory(pinfo), info.schema(), observed),
-        keyIsString, cap)
+        keyIsString)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val msgs = messages.collect { case m: UpdateTaskMessage => m }
@@ -314,11 +316,10 @@ class GraftDeltaUpdateWrite(s: SparkSession, root: String,
       // an UPDATE matching nothing commits NO version (the CoW/MoR
       // no-op contract); any eagerly created files stay orphans
       if (total == 0) return
-      require(total <= cap,
-        s"SQL UPDATE matched $total keys, past " +
-          s"spark.graft.dml.maxDeleteKeys=$cap — this is a bulk " +
-          "rewrite, not a correction stream: drop the mor key for " +
-          "the copy-on-write path (or raise the cap)")
+      require(total <= GraftRowLevelOps.MaxDeleteKeys,
+        s"SQL UPDATE matched $total keys, past ${GraftRowLevelOps.CapName}" +
+          " — this is a bulk rewrite, not a correction stream: drop the " +
+            "mor key for the copy-on-write path")
       // finalize the rewritten-row files
       db.commit(msgs.map(m => ObservingWrites.inner(m.inner)))
       import s.implicits._
@@ -356,7 +357,7 @@ class GraftDeltaUpdateWrite(s: SparkSession, root: String,
   */
 class UpdateRowWriterFactory(
     inner: org.apache.spark.sql.connector.write.DataWriterFactory,
-    keyIsString: Boolean, cap: Long) extends DeltaWriterFactory {
+    keyIsString: Boolean) extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long)
       : DeltaWriter[InternalRow] = new DeltaWriter[InternalRow] {
@@ -367,10 +368,10 @@ class UpdateRowWriterFactory(
       scala.collection.mutable.ArrayBuffer.empty[String]
 
     private def checkCap(): Unit =
-      require(longs.length <= cap && strings.length <= cap,
-        s"SQL UPDATE matched more than spark.graft.dml.maxDeleteKeys=" +
-          s"$cap keys in one task — drop the mor key for the " +
-          "copy-on-write path (or raise the cap)")
+      require(longs.length <= GraftRowLevelOps.MaxDeleteKeys &&
+        strings.length <= GraftRowLevelOps.MaxDeleteKeys,
+        s"SQL UPDATE matched more than ${GraftRowLevelOps.CapName} " +
+          "keys in one task — drop the mor key for the copy-on-write path")
 
     override def update(metadata: InternalRow, id: InternalRow,
         row: InternalRow): Unit = {
@@ -403,24 +404,23 @@ private case class DeleteKeysMessage(longs: Array[Long],
     strings: Array[String]) extends WriterCommitMessage
 
 class GraftDeltaDeleteWrite(s: SparkSession, root: String, morKey: String,
-    keyIsString: Boolean, cap: Long) extends DeltaWrite {
+    keyIsString: Boolean) extends DeltaWrite {
 
   override def toBatch(): DeltaBatchWrite = new DeltaBatchWrite {
 
     override def createBatchWriterFactory(pinfo: PhysicalWriteInfo)
         : DeltaWriterFactory =
-      new KeyCollectingWriterFactory(keyIsString, cap)
+      new KeyCollectingWriterFactory(keyIsString)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val msgs = messages.collect { case m: DeleteKeysMessage => m }
       val total = msgs.map(m =>
         if (keyIsString) m.strings.length.toLong
         else m.longs.length.toLong).sum
-      require(total <= cap,
-        s"SQL DELETE matched $total keys, past " +
-          s"spark.graft.dml.maxDeleteKeys=$cap — this is a bulk purge, " +
-          "not a takedown: drop the mor key to take the copy-on-write " +
-          "path (or raise the cap)")
+      require(total <= GraftRowLevelOps.MaxDeleteKeys,
+        s"SQL DELETE matched $total keys, past ${GraftRowLevelOps.CapName}" +
+          " — this is a bulk purge, not a takedown: drop the mor key to " +
+            "take the copy-on-write path")
       import s.implicits._
       val keys =
         if (keyIsString) msgs.flatMap(_.strings).toSeq.toDF(morKey)
@@ -435,7 +435,7 @@ class GraftDeltaDeleteWrite(s: SparkSession, root: String, morKey: String,
     s"GraftDeltaDeleteWrite root=$root key=$morKey"
 }
 
-class KeyCollectingWriterFactory(keyIsString: Boolean, cap: Long)
+class KeyCollectingWriterFactory(keyIsString: Boolean)
   extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long)
@@ -445,10 +445,10 @@ class KeyCollectingWriterFactory(keyIsString: Boolean, cap: Long)
     private val strings = scala.collection.mutable.ArrayBuffer.empty[String]
 
     private def checkCap(): Unit =
-      require(longs.length <= cap && strings.length <= cap,
-        s"SQL DELETE matched more than spark.graft.dml.maxDeleteKeys=" +
-          s"$cap keys in one task — drop the mor key for the " +
-          "copy-on-write path (or raise the cap)")
+      require(longs.length <= GraftRowLevelOps.MaxDeleteKeys &&
+        strings.length <= GraftRowLevelOps.MaxDeleteKeys,
+        s"SQL DELETE matched more than ${GraftRowLevelOps.CapName} " +
+          "keys in one task — drop the mor key for the copy-on-write path")
 
     override def delete(metadata: InternalRow, id: InternalRow): Unit = {
       if (keyIsString) strings += id.getUTF8String(0).toString

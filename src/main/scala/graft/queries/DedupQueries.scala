@@ -84,13 +84,13 @@ object DedupQueries {
   /** Encoded-corpus docs cap for the broadcast form of the pair scan.
     * The real constraint is BYTES pinned per executor, so the default
     * derives from the measured per-doc pack width against a 128 MB
-    * budget (`spark.graft.dedup.maxBroadcastBytes`): a 377-shingle
-    * corpus packs at ~76 B/doc and broadcasts comfortably at 1 M+
-    * docs, where the old fixed 64 Ki-doc cap forced the shuffled
-    * blocked scan and paid ~µs of join machinery per candidate pair —
-    * measured 10–40× over the fused in-row sweep at the 30× octave
-    * probe. An explicit `spark.graft.dedup.maxBroadcastDocs` still
-    * overrides (the escape the route-equivalence specs force). Above
+    * budget ([[MaxBroadcastBytes]]): a 377-shingle corpus packs at
+    * ~76 B/doc and broadcasts comfortably at 1 M+ docs, where the old
+    * fixed 64 Ki-doc cap forced the shuffled blocked scan and paid
+    * ~µs of join machinery per candidate pair — measured 10–40× over
+    * the fused in-row sweep at the 30× octave probe. An explicit
+    * `spark.graft.dedup.maxBroadcastDocs` still overrides (the escape
+    * the route-equivalence specs force). Above
     * the cap [[bitsetPairScanBlocked]] runs — the vocabulary gate
     * alone is NOT enough, because a billion-row corpus with a tiny
     * shingle alphabet still routes to the bitset representation and
@@ -98,9 +98,10 @@ object DedupQueries {
     */
   private def maxBroadcastDocs(s: SparkSession, bytesPerDoc: Long): Long =
     s.conf.getOption("spark.graft.dedup.maxBroadcastDocs").map(_.toLong)
-      .getOrElse(
-        s.conf.get("spark.graft.dedup.maxBroadcastBytes",
-          (128L * 1024 * 1024).toString).toLong / math.max(bytesPerDoc, 1L))
+      .getOrElse(MaxBroadcastBytes / math.max(bytesPerDoc, 1L))
+
+  /** Encoded-corpus bytes the broadcast pair scan may pin per executor. */
+  private val MaxBroadcastBytes: Long = 128L * 1024 * 1024
 
   /** The encoded corpus packed into primitive arrays sorted by doc_id —
     * the one-broadcast state of [[bitsetPairScanFused]].
