@@ -1,16 +1,13 @@
 #!/bin/bash
 # Per-family isolated bench: each query family alone in a FRESH JVM
-# (bare java, no sbt), min-of-N per query, retry/prev-compare off —
-# the regime-robust record the round-15 verdict asked for (its task 3)
-# and the post-optimization re-record of round 16.
+# (bare java, no sbt), with Bench's own min-of-2 per query.
 #
-# Usage: scripts/isolated_bench.sh <classpath-file> <out-dir> [repeat]
+# Usage: scripts/isolated_bench.sh <classpath-file> <out-dir>
 # Classpath file: one ':'-joined line, e.g. from
 #   sbt --error 'print Runtime/fullClasspath' + Attributed() stripping.
 set -u
 CP_FILE=${1:?classpath file}
 OUT=${2:?out dir}
-REPEAT=${3:-2}
 SF=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}
 CPUS=${SPARK_GRAFT_CPUS:-32}
 mkdir -p "$OUT"
@@ -30,9 +27,7 @@ for line in $FAMS; do
   f=${line%%=*}; qs=${line#*=}
   echo "== family $f" >&2
   SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$CPUS" \
-  SPARK_GRAFT_ONLY="$qs" SPARK_GRAFT_BENCH_REPEAT="$REPEAT" \
-  SPARK_GRAFT_BENCH_RETRY=0 SPARK_GRAFT_BENCH_PREV=/nonexistent \
-  SPARK_GRAFT_BENCH_OUT="$OUT/fam_$f.json" \
+  SPARK_GRAFT_ONLY="$qs" SPARK_GRAFT_BENCH_OUT="$OUT/fam_$f.json" \
   java -Xmx100g -cp "$CP" graft.Bench > "$OUT/fam_$f.log" 2>&1
-  echo "   rc=$? $(grep -c '\[bench\]' "$OUT/fam_$f.log") runs" >&2
+  echo "   rc=$? $(grep -c 'rows=' "$OUT/fam_$f.log") runs" >&2
 done

@@ -1,206 +1,230 @@
 package graft
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
+
+/** The benchmark harness over the declared queries.
+  *
+  * Each query runs [[Runs]] times, every run from a cleared cache; the
+  * record keeps the fastest run's wall, Spark job count and driver gap,
+  * and the spread `(max - min) / min` of the walls. A contended machine
+  * moment can inflate one run, but not two independent ones.
+  *
+  * Usage: `sbt "runMain graft.Bench [plansDir]"`. With a directory,
+  * `explain("formatted")` of each query's returned frame is written to
+  * `<plansDir>/<query>.txt`. Env: `SPARK_GRAFT_SF_DIR`,
+  * `SPARK_GRAFT_CPUS`, `SPARK_GRAFT_ONLY` (comma-separated subset) and
+  * `SPARK_GRAFT_BENCH_OUT` (record file, default `BENCH_LOCAL.json`).
+  */
 object Bench {
+
+  /** Timed runs per query; the record keeps the fastest. */
+  val Runs = 2
+
+  type Query = (SparkSession, String) => DataFrame
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // validated up front: the value is interpolated unquoted into the
-    // JSON record below ("*" would emit invalid JSON and silently break
-    // every consumer, including the next run's cpu identity check) and
-    // spark.sql.shuffle.partitions requires a number anyway
+    // JSON record, and spark.sql.shuffle.partitions requires a number
     require(cpus.matches("\\d+"),
       s"SPARK_GRAFT_CPUS must be a positive integer, got '$cpus' " +
         "(local[*] is not supported — pass the actual core count)")
-    val spark = GraftSession.local(cpus)
-    // Warmup: touch every table once (parquet footers, FS cache, codegen,
-    // executor threads) so per-query timings measure the query, not
-    // first-job session initialization.
-    Option(new java.io.File(sfDir).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet"))
-      .foreach(f => spark.read.parquet(f.getPath).count())
-    val failed = scala.collection.mutable.ListBuffer.empty[String]
-    val clearBetween = sys.env.get("SPARK_GRAFT_CLEAR_CACHE").contains("1")
-    // comma-separated allowlist for profiling a subset in isolation
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    // SPARK_GRAFT_BENCH_REPEAT=N runs each query N times and reports the
-    // MIN — one contended/anomalous machine moment then can't record a
-    // 20× phantom for a single query (the honest figure for "how fast is
-    // this plan" is its best observed run; the file stays complete either
-    // way). Default 1: the driver's wall-clock budget is per-round.
-    val repeat = sys.env.get("SPARK_GRAFT_BENCH_REPEAT")
-      .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(1)
-    def run1(name: String, fn: (SparkSession, String) => DataFrame)
-        : Double = {
-      if (clearBetween) spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      val n = try { fn(spark, sfDir).count() }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          failed += name
-          -1L }
-      val s0 = (System.nanoTime() - t0) / 1e9
-      if (sys.env.contains("SPARK_GRAFT_LEAK_DEBUG"))
-        System.err.println(s"[leak] after $name: " +
-          s"${spark.sparkContext.getPersistentRDDs.size} cached RDDs")
-      System.err.println(f"[bench] $name%-22s $s0%8.2fs  rows=$n")
-      s0
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
+    val spark = GraftSession.local(cpus)
+    try {
+      // Warmup: touch every table once (parquet footers, FS cache,
+      // codegen, executor threads) so per-query timings measure the
+      // query, not first-job session initialization.
+      Option(new java.io.File(sfDir).listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.endsWith(".parquet"))
+        .foreach(f => spark.read.parquet(f.getPath).count())
+      run(spark, sfDir,
+        SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) },
+        out, args.headOption)
+    } finally spark.stop()
+  }
+
+  /** One Spark job as the listener saw it; times are the events' own
+    * epoch-millisecond stamps, `endMs` is -1 until the job ends.
+    */
+  private final case class Job(id: Int, startMs: Long, endMs: Long,
+      site: String, exec: String)
+
+  /** Records every job's start and end. Read only after the listener bus
+    * has been drained.
+    */
+  private final class JobListener extends SparkListener {
+    private val jobs = new ConcurrentHashMap[Int, Job]()
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val site = e.stageInfos.lastOption.map(_.name).getOrElse("?")
+      // the ROOT execution id groups AQE stage-materialization and
+      // broadcast-build sub-jobs under the statement that planned them,
+      // which the bare callsite (often a CompletableFuture frame) cannot
+      val exec = Option(e.properties).flatMap(p =>
+        Option(p.getProperty("spark.sql.execution.root.id"))
+          .orElse(Option(p.getProperty("spark.sql.execution.id"))))
+        .getOrElse("-")
+      jobs.put(e.jobId, Job(e.jobId, e.time, -1L, site.take(90), exec))
     }
-    val queriesToRun = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    // FAMILY ISOLATION (SPARK_GRAFT_FAMILY_ISOLATE=0 disables): the
-    // suite accumulates driver-side state across ~250 queries — cached
-    // datasets, and above all LOADED CATALOG TABLES whose
-    // DirStatsProviders memoize deserialized bloom filters (megabytes
-    // each for the io-family fixtures) — which by the later families
-    // shows up as GC pressure misattributed to whichever query is
-    // running (the r14 record's s-family inflation on untouched code).
-    // Dropping caches + registered catalog instances at each FAMILY
-    // boundary (~12 transitions, milliseconds each) keeps every
-    // family's measurement starting from the same driver state without
-    // changing the record's comparable alphabetical order.
-    val isolate = !sys.env.get("SPARK_GRAFT_FAMILY_ISOLATE").contains("0")
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      jobs.computeIfPresent(e.jobId, (_, j) => j.copy(endMs = e.time))
+    def all: Seq[Job] = jobs.values().asScala.toSeq.sortBy(_.id)
+  }
+
+  /** Length of the union of `[start, end]` intervals clipped to
+    * `[lo, hi]`: jobs that overlap (`GraftPar.all`) count once.
+    */
+  def unionMs(intervals: Seq[(Long, Long)], lo: Long, hi: Long): Long =
+    intervals.map { case (a, b) => (math.max(a, lo), math.min(b, hi)) }
+      .filter { case (a, b) => b > a }.sortBy(_._1)
+      // sorted by start, each interval adds only what lies past the
+      // furthest end seen so far
+      .foldLeft((0L, Long.MinValue)) { case ((total, reach), (a, b)) =>
+        (total + math.max(0L, b - math.max(a, reach)), math.max(reach, b))
+      }._1
+
+  /** One timed run; the window is on `System.currentTimeMillis`, the
+    * clock Spark stamps job events with, so jobs file under it exactly.
+    */
+  private final case class Run(startMs: Long, endMs: Long, failed: Boolean) {
+    def wallS: Double = (endMs - startMs) / 1e3
+    def jobsIn(all: Seq[Job]): Seq[Job] =
+      all.filter(j => j.startMs >= startMs && j.startMs <= endMs)
+    def gapS(all: Seq[Job]): Double = (endMs - startMs - unionMs(
+      jobsIn(all).map(j => (j.startMs, if (j.endMs < 0) endMs else j.endMs)),
+      startMs, endMs)) / 1e3
+  }
+
+  /** Runs `queries` in name order, prints the record and a short summary
+    * as the last two stdout lines, and writes the record to `out`.
+    */
+  def run(spark: SparkSession, sfDir: String, queries: Map[String, Query],
+      out: String, plansDir: Option[String]): Unit = {
+    val sc = spark.sparkContext
+    val listener = new JobListener
+    sc.addSparkListener(listener)
+    plansDir.foreach(d => Files.createDirectories(Paths.get(d)))
     def familyOf(name: String): String = name.takeWhile(_.isLetter)
     var lastFamily = ""
-    def isolateIfNewFamily(name: String): Unit = {
+    val ran = try queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      // the suite accumulates driver-side state across ~250 queries:
+      // cached datasets and, above all, loaded catalog tables whose
+      // DirStatsProviders memoize deserialized bloom filters. Dropping
+      // them at each family boundary (~12 transitions, milliseconds
+      // each) starts every family from the same driver state.
       val fam = familyOf(name)
-      if (isolate && fam != lastFamily && lastFamily.nonEmpty) {
+      if (fam != lastFamily && lastFamily.nonEmpty) {
         spark.catalog.clearCache()
-        // CatalogManager.reset() is private[sql] (public in bytecode) —
-        // it drops the memoized catalog INSTANCES, releasing each
-        // loaded table's DirStatsProvider caches for GC; registered
-        // catalog CONFS survive, so later gates re-instantiate lazily
+        // CatalogManager.reset() is private[sql] (public in bytecode):
+        // it drops the memoized catalog instances; registered catalog
+        // confs survive, so later queries re-instantiate lazily
         val cm = spark.sessionState.catalogManager
         cm.getClass.getMethod("reset").invoke(cm)
-        // also drop leftover persistent RDD blocks (staged/checkpointed
-        // frames of ALREADY-FINISHED queries — every gate rebuilds its
-        // own state per run, so nothing live references them at a
-        // family boundary); without this they linger until the async
-        // ContextCleaner gets to them and tax later families' memory
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        // persistent RDD blocks left by already-finished queries: every
+        // query rebuilds its own state per run, so nothing live holds them
+        sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
         System.gc()
       }
       lastFamily = fam
-    }
-    val firstPass = queriesToRun.map { case (name, fn) =>
-      isolateIfNewFamily(name)
-      name -> (1 to repeat).map(_ => run1(name, fn)).min
-    }.toMap
-    // Anomaly guard (on by default, SPARK_GRAFT_BENCH_RETRY=0 disables):
-    // a contended machine moment inflates a few queries by 10–20× in a
-    // single-pass record. Re-run only the SLOW OUTLIERS (above both an
-    // absolute floor and a multiple of the suite median) once and keep
-    // the min — bounded extra wall-clock, and a phantom can't survive
-    // two independent runs. Queries that are genuinely slow twice keep
-    // their honest number.
-    val retryOn = !sys.env.get("SPARK_GRAFT_BENCH_RETRY").contains("0")
-    val results =
-      if (!retryOn || firstPass.size < 4) firstPass
-      else {
-        val sorted = firstPass.values.toSeq.sorted
-        val median = sorted(sorted.size / 2)
-        val threshold = math.max(4.0, median * 4)
-        val outliers = queriesToRun.filter { case (name, _) =>
-          firstPass(name) > threshold && !failed.contains(name) }
-        if (outliers.nonEmpty)
-          System.err.println(s"[bench] re-running ${outliers.size} " +
-            s"outlier(s) above ${f"$threshold%.1f"}s: " +
-            outliers.map(_._1).mkString(","))
-        firstPass ++ outliers.map { case (name, fn) =>
-          name -> math.min(firstPass(name), run1(name, fn))
-        }
+      var frame: Option[DataFrame] = None
+      def once(): Run = {
+        spark.catalog.clearCache()
+        val t0 = System.currentTimeMillis()
+        val (rows, failed) =
+          try {
+            val df = fn(spark, sfDir)
+            frame = Some(df)
+            (df.count(), false)
+          } catch { case e: Throwable =>
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+            (-1L, true)
+          }
+        val r = Run(t0, System.currentTimeMillis(), failed)
+        System.err.println(f"[bench] $name%-22s ${r.wallS}%8.3fs  rows=$rows")
+        r
       }
-    // Contention hygiene vs the PREVIOUS record (r7 judge task #7):
-    // same-code queries have drifted 2–5× between rounds purely from
-    // suite contention, consuming review attention every round. At the
-    // END of the suite (caches warm, machine quiet), re-run ONCE any
-    // query that exceeds its previous recorded time by >2× (and a 0.5 s
-    // floor — micro-queries jitter freely) and keep the minimum: a
-    // phantom can't survive two independent runs, while a genuine
-    // regression stays visible because both runs reproduce it. The
-    // previous record is the last BENCH_LOCAL.json (committed per
-    // round); SPARK_GRAFT_BENCH_PREV overrides, missing file = no-op.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "BENCH_LOCAL.json")
-    val prev: Map[String, Double] = {
-      val path = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", outPath)
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(path)),
-          java.nio.charset.StandardCharsets.UTF_8)
-        // Identity gate: a record left behind by an octave-probe run
-        // (different SF_DIR) or a different machine would make every
-        // >2x comparison meaningless — only compare same-sf, same-cpu
-        // records. Older records without a "cpus" field pass the cpu
-        // check (same-machine rounds wrote them).
-        val sfOk = {
-          val m = """"sf":"([^"]*)"""".r.findFirstMatchIn(txt)
-          m.exists(_.group(1) == sfDir)
-        }
-        val cpuOk = """"cpus":(\d+)""".r.findFirstMatchIn(txt)
-          .forall(_.group(1) == cpus)
-        val qstart = txt.indexOf("\"queries\":{")
-        if (qstart < 0 || !sfOk || !cpuOk) {
-          if (qstart >= 0)
-            System.err.println("[bench] previous record is for a " +
-              "different sf dir or cpu count — skipping >2x comparison")
-          Map.empty
-        } else {
-          val sub = txt.substring(qstart + 11, txt.indexOf("}", qstart))
-          """"([A-Za-z0-9_]+)":([-0-9.eE]+)""".r.findAllMatchIn(sub)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
-      } catch { case scala.util.control.NonFatal(_) => Map.empty }
+      val runs = scala.collection.mutable.ArrayBuffer(once())
+      while (runs.size < Runs && !runs.last.failed) runs += once()
+      for (dir <- plansDir; df <- frame)
+        try Files.write(Paths.get(dir, s"$name.txt"), df.queryExecution
+          .explainString(ExplainMode.fromString("formatted")).getBytes(UTF_8))
+        catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] $name: no plan: ${e.getMessage}") }
+      (name, runs.toSeq, sc.getPersistentRDDs.size)
+    } finally {
+      // one drain for the whole suite: every job of a finished action
+      // has posted its end event by now. listenerBus is private[spark]
+      // (public in bytecode).
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+        .invoke(bus, Long.box(60000L))
+      sc.removeSparkListener(listener)
     }
-    val finalResults =
-      if (prev.isEmpty) results
-      else {
-        val regressed = queriesToRun.filter { case (name, _) =>
-          !failed.contains(name) && results(name) > 0.5 &&
-            prev.get(name).exists(p => p > 0 && results(name) > 2.0 * p)
+    val jobs = listener.all
+
+    final case class Row(name: String, best: Run, spread: Double,
+        jobs: Seq[Job], gapS: Double, failed: Boolean)
+    val rows = ran.map { case (name, runs, persisted) =>
+      val best = runs.minBy(_.wallS)
+      val spread = if (best.wallS > 0)
+        (runs.map(_.wallS).max - best.wallS) / best.wallS else 0.0
+      val row = Row(name, best, spread, best.jobsIn(jobs), best.gapS(jobs),
+        runs.exists(_.failed))
+      System.err.println(f"[bench] $name%-22s min ${best.wallS}%.3fs " +
+        f"spread $spread%.3f jobs ${row.jobs.size} gap ${row.gapS}%.3fs " +
+        s"persisted $persisted")
+      // per-statement view: root execution id in first-job order, with a
+      // representative (non-future) callsite when one exists
+      row.jobs.groupBy(_.exec).toSeq.sortBy(_._2.map(_.id).min)
+        .foreach { case (exec, js) =>
+          val wall = js.map(j =>
+            (if (j.endMs < 0) best.endMs else j.endMs) - j.startMs).sum
+          val rep = js.map(_.site).find(!_.contains("CompletableFuture"))
+            .getOrElse(js.head.site)
+          System.err.println(f"[bench]   exec $exec%-5s ${wall / 1e3}%7.3fs " +
+            f"n=${js.size}%-4d $rep")
         }
-        if (regressed.nonEmpty)
-          System.err.println(s"[bench] end-of-suite re-run of " +
-            s"${regressed.size} quer(ies) >2x their previous record: " +
-            regressed.map(_._1).mkString(","))
-        results ++ regressed.map { case (name, fn) =>
-          name -> math.min(results(name), run1(name, fn))
-        }
-      }
-    // 0.1 ms precision: full double repr at 119 queries pushed the line
-    // past log-truncation limits and cost a round's worth of timings
+      row
+    }
+
     def r4(v: Double): Double = math.rint(v * 10000) / 10000
-    val qs = finalResults.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + r4(v) }
-      .mkString("{", ",", "}")
-    val total =
-      if (finalResults.nonEmpty) finalResults.values.sum else 0.0
-    // failed queries are visible in the machine-readable output too — a
-    // fast failure must not read as a speedup
-    val failedJson = failed.distinct.map("\"" + _ + "\"")
+    def obj(f: Row => String): String =
+      rows.map(r => "\"" + r.name + "\":" + f(r)).mkString("{", ",", "}")
+    val total = r4(rows.map(_.best.wallS).sum)
+    // a fast failure must not read as a speedup
+    val failedJson = rows.filter(_.failed).map("\"" + _.name + "\"")
       .mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":${r4(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir","cpus":$cpus}"""
+    val cpus = sc.defaultParallelism
+    val json = s"""{"metric":"total","value":$total,"unit":"sec",""" +
+      s""""queries":${obj(r => r4(r.best.wallS).toString)},""" +
+      s""""spread":${obj(r => r4(r.spread).toString)},""" +
+      s""""jobs":${obj(_.jobs.size.toString)},""" +
+      s""""gap_s":${obj(r => r4(r.gapS).toString)},""" +
+      s""""failed":$failedJson,"sf":"$sfDir","cpus":$cpus}"""
     println(json)
-    // The full per-query line above is ~7 KB at 253 queries; the driver's
-    // captured artifact keeps only a 2000-char stdout TAIL, so r15/r16
-    // records parsed as null. Emit a SHORT summary as the FINAL stdout
-    // line (additions-only — the full line and the file write stay):
-    // totals + per-family subtotals fit the tail with room to spare.
-    val fams = finalResults.toSeq.groupBy { case (k, _) => familyOf(k) }
-      .toSeq.sortBy(_._1)
-      .map { case (f, kvs) => s"\"" + f + "\":" + r4(kvs.map(_._2).sum) }
+    // the full line is tens of KB at 253 queries and a captured stdout
+    // tail keeps ~2000 characters, so the LAST line is a short summary:
+    // totals and per-family subtotals
+    val fams = rows.groupBy(r => familyOf(r.name)).toSeq.sortBy(_._1)
+      .map { case (f, rs) => "\"" + f + "\":" + r4(rs.map(_.best.wallS).sum) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${r4(total)},"unit":"sec","n_queries":${finalResults.size},"families":$fams,"failed":$failedJson,"sf":"$sfDir","cpus":$cpus,"queries_file":"$outPath"}""")
-    // stdout goes through log capture that has truncated before; the
-    // file is the complete, always-parseable record of the same line.
-    // Default is cwd-relative so the record lands next to wherever the
-    // bench was launched; SPARK_GRAFT_BENCH_OUT overrides.
-    val out = outPath
-    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    println(s"""{"metric":"total_summary","value":$total,"unit":"sec",""" +
+      s""""n_queries":${rows.size},"families":$fams,"failed":$failedJson,""" +
+      s""""sf":"$sfDir","cpus":$cpus,"queries_file":"$out"}""")
+    // stdout capture has truncated before; the file is the complete record
+    try Files.write(Paths.get(out), (json + "\n").getBytes(UTF_8))
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] could not write $out: ${e.getMessage}") }
-    spark.stop()
   }
 }

@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The local session the harness mains (Bench, Verify, QProf, PlanDump)
-  * run the declared queries in, so every tool measures and checks the
-  * same session shape.
+/** The local session the harness mains (Bench, Verify) run the declared
+  * queries in, and the probes (PlanProbe, WriteProbe) run on, so every
+  * tool measures and checks the same session shape.
   */
 object GraftSession {
 

@@ -1211,12 +1211,6 @@ case class GraftScan(delegate: org.apache.spark.sql.execution.datasources
       // A huge runtime key set stops paying for the dirs × values
       // overlap sweep — skip pruning past the cap, never wrong.
       val cap = GraftScan.RuntimePruneMaxValues
-      if (session.conf.get("spark.graft.runtimePrune.debug", "false")
-          .toBoolean)
-        predicates.foreach(p => System.err.println(
-          s"[graft-runtime-prune] ${p.name()} children=" +
-            s"${p.children().take(3).map(_.getClass.getSimpleName)
-              .mkString(",")} n=${p.children().length}"))
       val colVals: Seq[(String, Set[String])] =
         predicates.toSeq.flatMap(colValues).filter(_._2.size <= cap)
       if (colVals.isEmpty) return

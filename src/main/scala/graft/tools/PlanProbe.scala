@@ -26,11 +26,7 @@ object PlanProbe {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/graft_planprobe")
-    val s = SparkSession.builder()
-      .appName("graft-plan-probe").master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.GraftSession.local("8")
     try run(s, out) finally s.stop()
   }
 

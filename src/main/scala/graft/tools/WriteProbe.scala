@@ -24,11 +24,7 @@ object WriteProbe {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/graft_writeprobe")
-    val s = SparkSession.builder()
-      .appName("graft-write-probe").master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.GraftSession.local("8")
     try run(s, out) finally s.stop()
   }
 
