@@ -144,10 +144,8 @@ object Cdc {
       // (already-hidden keys are absent from it, so nothing
       // double-deletes)
       val k = key()
-      val keys = SchemaMemo.read(s, tombs).select(col(k)).distinct()
-      val prevSnap = mergedSnapshot(s, root, v - 1, k)
-      val pre = prevSnap.join(broadcastIfSmall(s, keys, tombs),
-        Seq(k), "left_semi")
+      val pre = MergeOnRead.namedBy(s, mergedSnapshot(s, root, v - 1, k),
+        tombs, k)
       if (morins.isEmpty) return inserts :+ tag(pre, "delete")
       // update: rewritten rows whose key had a visible previous row
       // pair as pre/postimage; a rewritten key with NO previous row
@@ -233,14 +231,4 @@ object Cdc {
         .exists(MergeOnRead.isTombstone))
       MergeOnRead.snapshot(s, root, k, Some(v))
     else Manifest.snapshot(s, root, Some(v))
-
-  /** Broadcast the key frame when the raw tombstone row count (parquet
-    * footer metadata, free) stays under the MoR read path's cap — the
-    * same economics as the snapshot anti-join.
-    */
-  private def broadcastIfSmall(s: SparkSession, keys: DataFrame,
-      tombs: Seq[String]): DataFrame =
-    if (Manifest.dirRowCount(s, tombs) <=
-        MergeOnRead.maxBroadcastKeys(s)) broadcast(keys)
-    else keys
 }

@@ -107,23 +107,16 @@ object ChangeFeed {
       // appending-only window: inserts read ONLY the appended dirs
       val added = eTo.drop(eFrom.size)
       val (tombs, data) = added.partition(MergeOnRead.isTombstone)
-      val tombKeysTo = eTo.filter(MergeOnRead.isTombstone)
+      // inserts: the appended rows the version-`vTo` tombstones leave
+      // visible (an update's own re-inserts survive its scoped
+      // tombstone); deletes: the `vFrom` rows the new tombstones hide
       val ins =
         if (data.isEmpty) None
-        else {
-          val df = SchemaMemo.read(s, data)
-          Some(if (tombKeysTo.isEmpty) df
-          else df.join(
-            broadcast(SchemaMemo.read(s, tombKeysTo)
-              .select(col(keyCol)).distinct()),
-            Seq(keyCol), "left_anti"))
-        }
+        else Some(MergeOnRead.merged(s, data,
+          eTo.filter(MergeOnRead.isTombstone), keyCol))
       val del =
         if (tombs.isEmpty) None
-        else Some(base.join(
-          broadcast(SchemaMemo.read(s, tombs)
-            .select(col(keyCol)).distinct()),
-          Seq(keyCol), "left_semi"))
+        else Some(MergeOnRead.namedBy(s, base, tombs, keyCol))
       (ins.map(_.withColumn("_op", lit("I"))) ++
         del.map(_.withColumn("_op", lit("D"))))
         .reduceOption(_.unionByName(_))

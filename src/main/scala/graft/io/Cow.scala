@@ -36,9 +36,12 @@ private[io] object Cow {
   }
 
   /** Rewrite every hit directory through `xform` into
-    * `stagingDir/prefix-vV-N`, landed under `plan` carrying the hit's
-    * own sidecar columns, so maintenance never costs a table its scan
-    * planning. Returns the
+    * `stagingDir/prefix-vV-N`, named at the hit's own merge-on-read
+    * epoch ([[MergeOnRead.epochName]]: a `morins-<E>` hit lands as
+    * `morins-<E>-prefix-vV-N`, so live tombstones hide the rewrite
+    * exactly as they hid its source) and landed under `plan` carrying
+    * the hit's own sidecar columns, so maintenance never costs a table
+    * its scan planning. Returns the
     * replacements in hit order. The per-directory rewrites are
     * independent jobs over disjoint inputs and outputs, so they run
     * through [[GraftPar.all]] instead of back to back.
@@ -62,7 +65,8 @@ private[io] object Cow {
       stagingDir: String, prefix: String, baseVersion: Int,
       xform: DataFrame => DataFrame): Seq[String] =
     GraftPar.all(hit.zipWithIndex.map { case (d, i) => () =>
-      val outd = s"$stagingDir/$prefix-v$baseVersion-$i"
+      val outd = s"$stagingDir/" +
+        MergeOnRead.epochName(d, s"$prefix-v$baseVersion-$i")
       val carried = plan.carrying(s, Seq(d))
       val seen = Landing.observing(carried, xform(SchemaMemo.read(s,
         Seq(d))))(_.write.mode("overwrite").parquet(outd))

@@ -55,21 +55,20 @@ object Merge {
     val rewritten = Cow.rewrite(s, plan, hit, stagingDir, "merge", baseV,
       minusKeys)
     // a live tombstone over an upserted key would mask the incoming row
-    // (MergeOnRead masking is by key, table-wide) — the upsert IS the
-    // key's new truth, so intersecting tombstones rewrite minus the
-    // source keys, under a tombstone-prefixed name so they keep masking
-    // their remaining keys; the key's stale data rows were already
-    // rewritten out above, so nothing resurrects. A tombstone the
-    // source fully covers drops from the manifest without being
-    // rewritten at all.
+    // — the upsert IS the key's new truth, so intersecting tombstones
+    // rewrite minus the source keys, under their own kind and epoch so
+    // they keep masking their remaining keys exactly as before; the
+    // key's stale data rows were already rewritten out above, so
+    // nothing resurrects. A tombstone the source fully covers drops
+    // from the manifest without being rewritten at all.
     val (tombHit, tombCarried) = Cow.split(s, tombs,
       _.join(broadcast(keys), Seq(keyCol), "left_semi"))
     val newTombs = tombHit.zipWithIndex.flatMap { case (d, i) =>
       val remaining = minusKeys(SchemaMemo.read(s, Seq(d)))
       if (remaining.isEmpty) None
       else {
-        val outd = s"$stagingDir/${MergeOnRead.TombstonePrefix}" +
-          s"merge-v$baseV-$i"
+        val outd = s"$stagingDir/" +
+          MergeOnRead.epochName(d, s"merge-v$baseV-$i")
         remaining.write.mode("overwrite").parquet(outd)
         Some(outd)
       }

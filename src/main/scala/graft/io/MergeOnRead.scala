@@ -49,15 +49,19 @@ object MergeOnRead {
     nameOf(entry).startsWith(TombstonePrefix)
 
   // ── EPOCH scoping — what makes a write-cheap UPDATE expressible as
-  // tombstone + re-insert (the deletion-vector shape): a GLOBAL
-  // tombstone hides every row carrying its key, so the re-inserted row
-  // would hide itself. An epoch-scoped tombstone (`tombstones-e<N>-…`)
-  // hides a key's rows ONLY in directories of a LOWER epoch; the
-  // update's own rewritten rows land in a `morins-<N>-…` directory AT
-  // that epoch and stay visible, while a LATER update/delete (higher
-  // epoch, or global) hides them in turn. Ordinary directories are
-  // epoch 0, and a legacy (epoch-less) tombstone applies to
-  // everything — so every pre-existing table reads byte-identically. ──
+  // tombstone + re-insert (the deletion-vector shape). THE RULE, which
+  // every reader and rewrite applies through [[merged]]: a row of a
+  // data directory at epoch `de` ([[dirEpoch]]) is hidden iff a live
+  // tombstone naming its key has rank `te > de` ([[tombRank]]). An
+  // update's epoch-scoped tombstone (`tombstones-e<N>-…`, te = N) hides
+  // a key's rows ONLY in directories of a lower epoch; its own
+  // rewritten rows land in a `morins-<N>-…` directory AT that epoch
+  // and stay visible, while a LATER update hides them in turn. An
+  // unscoped tombstone — what every MoR DELETE ([[deleteKeys]]) writes
+  // — has te = Long.MaxValue and hides its keys at every epoch.
+  // Ordinary directories are epoch 0. Rewrites keep their source's
+  // epoch ([[epochName]]), so a rewritten row stays exactly as visible
+  // as the row it copies. ──
 
   private val InsertEpoch = (InsertPrefix + "(\\d+)-.*").r
   private val TombEpoch = (TombstonePrefix + "e(\\d+)-.*").r
@@ -69,12 +73,33 @@ object MergeOnRead {
   }
 
   /** A tombstone's scope epoch: Some(e) hides keys only in directories
-    * with epoch < e; None (the legacy form) hides them everywhere.
+    * with epoch < e; None (unscoped — every MoR DELETE's) hides them
+    * everywhere.
     */
   def tombEpoch(entry: String): Option[Long] =
     nameOf(entry) match {
       case TombEpoch(e) => Some(e.toLong)
       case _ => None
+    }
+
+  /** The rank `te` a tombstone hides below: its scope epoch, or
+    * Long.MaxValue for an unscoped tombstone.
+    */
+  private[graft] def tombRank(entry: String): Long =
+    tombEpoch(entry).getOrElse(Long.MaxValue)
+
+  /** The basename a rewrite of `src` lands under: `name`, marked with
+    * `src`'s kind and epoch — `tombstones-[e<N>-]name` for a tombstone,
+    * `morins-<N>-name` for a data directory of epoch N > 0, `name`
+    * otherwise — so the rewrite hides and is hidden exactly like its
+    * source.
+    */
+  private[graft] def epochName(src: String, name: String): String =
+    if (isTombstone(src))
+      TombstonePrefix + tombEpoch(src).fold("")(e => s"e$e-") + name
+    else dirEpoch(src) match {
+      case 0L => name
+      case e => s"$InsertPrefix$e-$name"
     }
 
   /** The next free epoch for a scoped commit: above every epoch any
@@ -181,43 +206,82 @@ object MergeOnRead {
   }
 
   /** Accumulated-tombstone-key cap for the broadcast form of the
-    * read-path anti-join. Below it the key set broadcasts (one scan of
-    * the data, zero shuffle); above it — a heavy takedown stream between
-    * [[fold]]s — the same anti-join runs SHUFFLED instead, trading a
-    * shuffle for not pushing an unbounded key set through driver memory
-    * and the broadcast limit. Results are identical either way; the cap
-    * only picks the physical strategy. Gated on the RAW tombstone row
-    * count (a parquet metadata-only read, free) which upper-bounds the
-    * distinct key count.
+    * merge's anti-join. Below it the tombstone keys broadcast (one scan
+    * of the data, zero shuffle); above it — a heavy takedown stream
+    * between [[fold]]s — the same anti-join runs SHUFFLED instead,
+    * trading a shuffle for not pushing an unbounded key set through
+    * driver memory and the broadcast limit. Results are identical
+    * either way; the cap only picks the physical strategy. Gated on the
+    * RAW tombstone row count (parquet FOOTER metadata,
+    * [[Manifest.dirRowCount]], memoized — never a count job), which
+    * upper-bounds the distinct key count.
     */
   private[graft] def maxBroadcastKeys(s: SparkSession): Long =
     s.conf.get("spark.graft.mor.maxBroadcastKeys", "4194304").toLong
 
-  /** The tombstone key set, broadcast-hinted only while the accumulated
-    * raw key rows stay under [[maxBroadcastKeys]] — decided from the
-    * parquet FOOTER row counts ([[Manifest.dirRowCount]], driver
-    * metadata only, memoized), not a count job.
-    */
-  private def keySet(s: SparkSession, tombs: Seq[String],
-      keyCol: String): DataFrame = {
-    val keys = SchemaMemo.read(s, tombs).select(col(keyCol)).distinct()
+  private def capped(s: SparkSession, tombs: Seq[String],
+      keys: DataFrame): DataFrame =
     if (Manifest.dirRowCount(s, tombs) <= maxBroadcastKeys(s))
       broadcast(keys)
     else keys
+
+  /** The distinct keys `tombs` name, broadcast within the cap. */
+  private def keySet(s: SparkSession, tombs: Seq[String],
+      keyCol: String): DataFrame =
+    capped(s, tombs,
+      SchemaMemo.read(s, tombs).select(col(keyCol)).distinct())
+
+  /** Rows of `df` whose key a tombstone in `tombs` names — the rows a
+    * newly committed set of tombstones hides, i.e. a window's delete
+    * pre-images when `df` is the merged snapshot before them (new
+    * tombstones outrank every row already visible).
+    */
+  private[graft] def namedBy(s: SparkSession, df: DataFrame,
+      tombs: Seq[String], keyCol: String): DataFrame =
+    df.join(keySet(s, tombs, keyCol), Seq(keyCol), "left_semi")
+
+  private val DirEpochCol = "_graft_mor_de"
+  private val TombRankCol = "_graft_mor_te"
+
+  /** One row per key `tombs` name: (`keyCol`, its highest
+    * [[tombRank]] as `_graft_mor_te`).
+    */
+  private[graft] def tombRanks(s: SparkSession, tombs: Seq[String],
+      keyCol: String): DataFrame =
+    tombs.groupBy(tombRank).toSeq.map { case (te, dirs) =>
+      SchemaMemo.read(s, dirs).select(col(keyCol), lit(te).as(TombRankCol))
+    }.reduce(_.union(_))
+      .groupBy(col(keyCol)).agg(max(TombRankCol).as(TombRankCol))
+
+  /** The merged rows of `data` under `tombs` — the epoch rule (see
+    * above) in the one form every reader and rewrite uses. Each epoch
+    * group of `data` reads tagged with its `de`, the groups joined by
+    * name (a late column null-fills the groups written before it, the
+    * standard drift semantic); then ONE anti-join against
+    * [[tombRanks]] on `key = key && te > de` applies every tombstone to
+    * every group at once, broadcast within [[maxBroadcastKeys]].
+    * Without tombstones it is the plain read.
+    */
+  private[graft] def merged(s: SparkSession, data: Seq[String],
+      tombs: Seq[String], keyCol: String): DataFrame = {
+    if (tombs.isEmpty) return SchemaMemo.read(s, data)
+    val rows = data.groupBy(dirEpoch).toSeq.sortBy(_._1)
+      .map { case (de, dirs) =>
+        SchemaMemo.read(s, dirs).withColumn(DirEpochCol, lit(de))
+      }.reduce(_.unionByName(_, allowMissingColumns = true))
+    val tk = capped(s, tombs, tombRanks(s, tombs, keyCol))
+    rows.join(tk, rows(keyCol) === tk(keyCol) &&
+        tk(TombRankCol) > rows(DirEpochCol), "left_anti")
+      .drop(DirEpochCol)
   }
 
-  /** The merged snapshot a version pins: data entries minus any row
-    * whose `keyCol` appears in a tombstone entry. The tombstone side is
-    * key-only and broadcast into the anti-join — the per-read price of
-    * deferring the rewrite, bounded by accumulated deletes, not data —
-    * falling back to a shuffled anti-join past [[maxBroadcastKeys]]
-    * (identical results; see there).
+  /** The merged snapshot a version pins: [[merged]] over its data and
+    * tombstone entries.
     */
   def snapshot(s: SparkSession, root: String, keyCol: String,
       version: Option[Int] = None): DataFrame = {
     val (tombs, data) = Manifest.entries(s, root, version)
       .partition(isTombstone)
-    if (tombs.isEmpty) return SchemaMemo.read(s, data)
     // a table whose every live entry is a tombstone (all rows logically
     // deleted, original data replaced away) snapshots EMPTY at the FULL
     // table schema — recovered from the latest prior version that still
@@ -225,7 +289,7 @@ object MergeOnRead {
     // columns keep analyzing. Only when no version ever carried data
     // (or its files were already reclaimed) does the frame narrow to
     // the key column, the one schema the live entries still prove.
-    if (data.isEmpty) {
+    if (data.isEmpty && tombs.nonEmpty) {
       val upTo = version.getOrElse(Manifest.versions(s, root).last)
       val prior = Manifest.versions(s, root).filter(_ <= upTo)
         .sorted.reverse.iterator
@@ -237,66 +301,7 @@ object MergeOnRead {
         .getOrElse(
           SchemaMemo.read(s, tombs).select(col(keyCol)).limit(0))
     }
-    val scoped = tombs.filter(tombEpoch(_).isDefined)
-    if (scoped.isEmpty)
-      return SchemaMemo.read(s, data)
-        .join(keySet(s, tombs, keyCol), Seq(keyCol), "left_anti")
-    // epoch-scoped merge: group data dirs by THEIR epoch; each group
-    // anti-joins only the tombstones that outrank it (legacy global
-    // tombstones outrank everything). Group count = distinct live
-    // epochs — bounded by un-folded updates, never data.
-    val global = tombs.filterNot(tombEpoch(_).isDefined)
-    // spark.graft.mor.flatSnapshot=false forces the per-group form —
-    // the A/B lever for plan capture and regression triage
-    val uniform = s.conf.get("spark.graft.mor.flatSnapshot", "true")
-      .toBoolean && {
-      val schemas = data.map(SchemaMemo.schemaOf(s, _))
-      schemas.forall(_.isDefined) && schemas.flatten.distinct.size == 1
-    }
-    if (uniform) {
-      // ── flat merge (uniform schema, the common case): ONE anti-join
-      // for EVERY epoch group. A row from a dir of epoch `de` is
-      // hidden iff some tombstone naming its key outranks de (global =
-      // rank ∞) ⇔ the key's MAX tombstone epoch > de — so one
-      // (key, maxEpoch) frame and one epoch-conditioned anti-join
-      // replace a distinct + broadcast + anti-join PER GROUP (each of
-      // which was a separate broadcast-build job on every evaluation).
-      // Identical rows by construction; the grouped path below remains
-      // for drift-evolved tables (per-group schemas differ — its
-      // unionByName null-fill semantic is spec-pinned).
-      val de = col("_graft_mor_de")
-      val te = col("_graft_mor_te")
-      val flat = data.groupBy(dirEpoch).toSeq.sortBy(_._1)
-        .map { case (e, dirs) =>
-          SchemaMemo.read(s, dirs).withColumn("_graft_mor_de", lit(e))
-        }.reduce(_.union(_))
-      val tombKeyEpochs = tombs.groupBy(tombEpoch).toSeq
-        .map { case (teo, dirs) =>
-          SchemaMemo.read(s, dirs).select(col(keyCol))
-            .withColumn("_graft_mor_te",
-              lit(teo.getOrElse(Long.MaxValue)))
-        }.reduce(_.union(_))
-        .groupBy(col(keyCol)).agg(max(te).as("_graft_mor_te"))
-      val tk =
-        if (Manifest.dirRowCount(s, tombs) <= maxBroadcastKeys(s))
-          broadcast(tombKeyEpochs)
-        else tombKeyEpochs
-      return flat.join(tk,
-        flat(keyCol) === tk(keyCol) && te > de, "left_anti")
-        .drop("_graft_mor_de")
-    }
-    // allowMissingColumns: a drift-evolved table's late columns may
-    // exist only in the newer (higher-epoch) morins directories — the
-    // strict union would refuse a layout the single flat parquet read
-    // of the unscoped path tolerates; missing columns fill null, the
-    // standard drift semantic
-    data.groupBy(dirEpoch).toSeq.sortBy(_._1).map { case (de, dirs) =>
-      val applicable = global ++ scoped.filter(t => tombEpoch(t).get > de)
-      val df = SchemaMemo.read(s, dirs)
-      if (applicable.isEmpty) df
-      else df.join(keySet(s, applicable, keyCol), Seq(keyCol),
-        "left_anti")
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    merged(s, data, tombs, keyCol)
   }
 
   /** Write-cheap row-level UPDATE (the deletion-vector shape, io63):
@@ -306,9 +311,9 @@ object MergeOnRead {
     * deferral exactly like a delete's. `rows` must carry the table's
     * full schema with `keyCol` matching `keys` (the caller's
     * contract — the SQL path derives both from the same matched set).
-    * Refuses while LEGACY (unscoped) tombstones are live: they outrank
-    * every epoch, so they would hide this update's re-inserted rows —
-    * fold first. Returns None (nothing committed) on an empty update.
+    * Refuses while unscoped tombstones (a MoR DELETE's) are live: they
+    * outrank every epoch, so they would hide this update's re-inserted
+    * rows — fold first. Returns None (nothing committed) on an empty update.
     * Concurrent updates racing this one: disjoint key sets merge
     * correctly (each epoch-N tombstone hides only lower epochs);
     * OVERLAPPING keys throw [[ConcurrentUpdateException]] from the
@@ -320,7 +325,7 @@ object MergeOnRead {
       committer: Committer = FsCreateCommitter): Option[Int] = {
     val entries = Manifest.entries(s, root)
     require(!entries.exists(t => isTombstone(t) && tombEpoch(t).isEmpty),
-      s"$root carries legacy (unscoped) tombstones — they outrank " +
+      s"$root carries unscoped (MoR DELETE) tombstones — they outrank " +
         "every epoch and would hide this update's rewritten rows; " +
         "fold first")
     val epoch = nextEpoch(entries)
@@ -373,44 +378,29 @@ object MergeOnRead {
     val (tombs, data) = Manifest.entries(s, root).partition(isTombstone)
     if (tombs.isEmpty) return None
     val plan = Landing.plan(s, root)
-    val scoped = tombs.filter(tombEpoch(_).isDefined)
-    // same cap discipline as the read path: a fold running precisely
-    // BECAUSE tombstones piled up must not be the thing that trips the
-    // broadcast limit
-    if (scoped.isEmpty) {
-      val keys = keySet(s, tombs, keyCol)
-      val (hit, carried) = Cow.split(s, data,
-        _.join(keys, Seq(keyCol), "left_semi"))
-      val rewritten = Cow.rewrite(s, plan, hit, stagingDir, "fold", baseV,
-        _.join(keys, Seq(keyCol), "left_anti"))
-      // op marker: a fold REWRITES the physical layout but preserves
-      // the MERGED view exactly (it applies tombstones the read path
-      // was already applying) — CDC skips it instead of diffing
-      val v = Manifest.rewrite(s, root, carried ++ rewritten, committer,
-        op = "fold")
-      return Some(RowDelete.Result(v, carried, rewritten))
-    }
-    // epoch-scoped fold: each epoch group of data dirs rewrites against
-    // ONLY the tombstones that outrank it (the read rule, applied
-    // copy-on-write); rewritten dirs are ordinary (epoch-0) names —
-    // with no tombstones left, epochs are spent
-    val global = tombs.filterNot(tombEpoch(_).isDefined)
-    val results = data.groupBy(dirEpoch).toSeq.sortBy(_._1)
-      .map { case (de, dirs) =>
-        val applicable = global ++ scoped.filter(t => tombEpoch(t).get > de)
+    // the read rule applied copy-on-write: data dirs group by the
+    // tombstones that outrank them, one split and one rewrite per group
+    // — one group while every tombstone is unscoped, never more than
+    // the live epochs otherwise. Keys broadcast within the same cap as
+    // the read path: a fold running BECAUSE tombstones piled up must
+    // not be the thing that trips the broadcast limit
+    val results = data.groupBy(d => tombs.filter(tombRank(_) > dirEpoch(d)))
+      .toSeq.sortBy(_._2.map(dirEpoch).min)
+      .map { case (applicable, dirs) =>
         if (applicable.isEmpty) (dirs, Seq.empty[String])
         else {
           val keys = keySet(s, applicable, keyCol)
           val (hit, carried) = Cow.split(s, dirs,
             _.join(keys, Seq(keyCol), "left_semi"))
-          val rewritten = Cow.rewrite(s, plan, hit, stagingDir,
-            s"fold-e$de", baseV,
-            _.join(keys, Seq(keyCol), "left_anti"))
-          (carried, rewritten)
+          (carried, Cow.rewrite(s, plan, hit, stagingDir, "fold", baseV,
+            _.join(keys, Seq(keyCol), "left_anti")))
         }
       }
     val carried = results.flatMap(_._1)
     val rewritten = results.flatMap(_._2)
+    // op marker: a fold REWRITES the physical layout but preserves the
+    // MERGED view exactly (it applies tombstones the read path was
+    // already applying) — CDC skips it instead of diffing
     val v = Manifest.rewrite(s, root, carried ++ rewritten, committer,
       op = "fold")
     Some(RowDelete.Result(v, carried, rewritten))

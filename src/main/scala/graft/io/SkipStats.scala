@@ -439,10 +439,10 @@ object SkipStats {
     * row-identical to filtering the full snapshot — pruning is an IO
     * optimization, never a semantic one. On a table carrying live
     * [[MergeOnRead]] tombstones the deletes must still be merged:
-    * pass the table's `morKey` and the pruned scan anti-joins the
-    * tombstone set exactly like [[MergeOnRead.snapshot]]; calling
-    * without it on such a table fails loudly rather than resurrecting
-    * deleted rows.
+    * pass the table's `morKey` and the pruned scan merges them through
+    * [[MergeOnRead.merged]], the rule [[MergeOnRead.snapshot]] applies;
+    * calling without it on such a table fails loudly rather than
+    * resurrecting deleted rows.
     */
   def scan(s: SparkSession, root: String, c: String, lo: Long,
       hi: Long, version: Option[Int] = None,
@@ -464,14 +464,6 @@ object SkipStats {
     require(tombs.isEmpty || morKey.nonEmpty,
       s"table at $root has live tombstones — pass morKey so the " +
         "pruned scan merges them (or fold first)")
-    // this scan's merge is GLOBAL (one anti-join) — an epoch-SCOPED
-    // tombstone (a MoR UPDATE's) would wrongly hide the update's own
-    // rewritten rows here; the DSv2 scan and MergeOnRead.snapshot
-    // handle scopes, this convenience does not
-    require(!tombs.exists(t => MergeOnRead.tombEpoch(t).isDefined),
-      s"table at $root carries epoch-scoped tombstones (a MoR " +
-        "UPDATE's) — fold first, or read through spark.read" +
-        ".format(\"graft\") / MergeOnRead.snapshot, which scope the merge")
     val df =
       if (data.isEmpty) {
         // everything pruned: an empty frame with the DATA schema —
@@ -481,11 +473,8 @@ object SkipStats {
         require(allData.nonEmpty, s"table at $root has no data entries")
         SchemaMemo.read(s, allData).limit(0)
       }
-      else if (tombs.isEmpty) SchemaMemo.read(s, data)
-      else SchemaMemo.read(s, data).join(
-        broadcast(SchemaMemo.read(s, tombs)
-          .select(col(morKey.get)).distinct()),
-        Seq(morKey.get), "left_anti")
+      else morKey.fold(SchemaMemo.read(s, data))(
+        MergeOnRead.merged(s, data, tombs, _))
     df.filter(ranges.map { r =>
       val dt = df.schema(r.c).dataType
       col(r.c).between(lit(r.lo).cast(dt), lit(r.hi).cast(dt))

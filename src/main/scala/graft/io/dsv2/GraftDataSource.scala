@@ -956,32 +956,17 @@ class GraftScanBuilder(s: SparkSession, root: String, version: Int,
     val (prunedKept, skipped) = pruning
     val (kept, limitDropped) = narrowed
     require(limitDropped.isEmpty || prunedKept.nonEmpty, "unreachable")
-    // ── tombstone key sets (bounded by accumulated deletes): one
-    // GLOBAL set (legacy tombstones — apply everywhere) plus one set
-    // per EPOCH-SCOPED tombstone (a MoR UPDATE's — applies only to
-    // directories of a lower epoch; see MergeOnRead's epoch model) ──
-    def collectKeys(dirs: Seq[String], key: String,
-        keyType: DataType): util.HashSet[Any] = {
-      val set = new util.HashSet[Any]()
-      if (dirs.isEmpty) return set
-      val vals = graft.io.SchemaMemo.read(s, dirs)
-        .select(key).distinct().collect()
-      keyType match {
-        case LongType => vals.foreach(r => set.add(r.getLong(0)))
-        case StringType =>
-          vals.foreach(r => set.add(UTF8String.fromString(r.getString(0))))
-        case other => throw new IllegalArgumentException(
-          s"morKey '$key' must be bigint or string, got $other")
-      }
-      set
-    }
-    val (scopedTombDirs, globalTombDirs) = tombDirs.partition(t =>
-      graft.io.MergeOnRead.tombEpoch(t).isDefined)
-    // ── the key-collect CAP: the reader-factory filter ships the key
-    // sets in every task closure and materializes them on the DRIVER,
-    // so it is only the right physical strategy while accumulated
-    // deletes stay small. Raw tombstone ROW counts (parquet footers,
-    // metadata-only, memoized) upper-bound the distinct keys; past
+    // ── the merge-on-read rule's key side (bounded by accumulated
+    // deletes): ONE collect of key → highest tombstone rank
+    // ([[graft.io.MergeOnRead.tombRanks]]; unscoped tombstones rank
+    // Long.MaxValue), which the reader factory compares against each
+    // partition's directory epoch.
+    //
+    // The CAP: the reader-factory filter ships the map in every task
+    // closure and materializes it on the DRIVER, so it is only the
+    // right physical strategy while accumulated deletes stay small.
+    // Raw tombstone ROW counts (parquet footers, metadata-only,
+    // memoized) upper-bound the distinct keys; past
     // `spark.graft.mor.maxBroadcastKeys` nothing is collected — the
     // scan is marked over-cap and [[graft.plans.MorAntiJoinStrategy]]
     // (installed with every graft catalog) re-plans it as a
@@ -993,24 +978,27 @@ class GraftScanBuilder(s: SparkSession, root: String, version: Int,
       else graft.io.Manifest.dirRowCount(s, tombDirs)
     val overCap =
       tombRows > graft.io.MergeOnRead.maxBroadcastKeys(s)
-    val tombFilter = if (tombDirs.isEmpty) None else {
+    val tombKeys = if (tombDirs.isEmpty) None else {
       val key = morKey.get
       val keyType = tableSchema(key).dataType
-      Some((key, keyType,
-        if (overCap) new util.HashSet[Any]()
-        else collectKeys(globalTombDirs, key, keyType)))
-    }
-    val scopedTombs: Seq[(Long, util.HashSet[Any])] =
-      if (overCap) Seq.empty
-      else scopedTombDirs.map { t =>
-        val (key, keyType, _) = tombFilter.get
-        (graft.io.MergeOnRead.tombEpoch(t).get,
-          collectKeys(Seq(t), key, keyType))
+      val ranks = new util.HashMap[Any, java.lang.Long]()
+      if (!overCap) {
+        val rows = graft.io.MergeOnRead.tombRanks(s, tombDirs, key)
+          .collect()
+        val keyOf: org.apache.spark.sql.Row => Any = keyType match {
+          case LongType => _.getLong(0)
+          case StringType => r => UTF8String.fromString(r.getString(0))
+          case other => throw new IllegalArgumentException(
+            s"morKey '$key' must be bigint or string, got $other")
+        }
+        rows.foreach(r => ranks.put(keyOf(r), r.getLong(1)))
       }
+      Some((key, keyType, ranks))
+    }
     // the delegate must READ the key column even when the query didn't
     // ask for it; the extra column rides the advertised readSchema
     // (Spark projects it away above the scan)
-    val delegateRequired = tombFilter match {
+    val delegateRequired = tombKeys match {
       case Some((key, _, _)) if !required.fieldNames.contains(key) =>
         StructType(required.fields :+ tableSchema(key))
       case _ => required
@@ -1020,13 +1008,12 @@ class GraftScanBuilder(s: SparkSession, root: String, version: Int,
     if (!aggPushed) delegate.pruneColumns(physSchema(delegateRequired))
     val parquetScan = delegate.build()
     new GraftScan(parquetScan, root, version, kept, skipped,
-      allPruned = kept.isEmpty && !aggPushed, tombFilter, s, tableSchema,
+      allPruned = kept.isEmpty && !aggPushed, tombKeys, s, tableSchema,
       delegateRequired, options, dirRequested, dataDirs, opState, rowOp,
       colMap, limitDropped = limitDropped,
       limitMode = limitPushed.isDefined || topNPushed.isDefined,
       topNMode = topNPushed.isDefined,
-      overCapTombs = overCap, tombDirs = tombDirs)(
-      dirStats, scopedTombs)
+      overCapTombs = overCap, tombDirs = tombDirs)(dirStats)
   }
 }
 
@@ -1052,7 +1039,7 @@ case class GraftScan(delegate: org.apache.spark.sql.execution.datasources
       .v2.parquet.ParquetScan,
     root: String, version: Int, keptDirs: Seq[String],
     skippedDirs: Seq[String], allPruned: Boolean,
-    tombFilter: Option[(String, DataType, util.HashSet[Any])],
+    tombKeys: Option[(String, DataType, util.HashMap[Any, java.lang.Long])],
     session: SparkSession, tableSchema: StructType,
     requiredSchema: StructType, options: CaseInsensitiveStringMap,
     dirRequested: Boolean = false, allDataDirs: Seq[String] = Seq.empty,
@@ -1062,10 +1049,8 @@ case class GraftScan(delegate: org.apache.spark.sql.execution.datasources
     topNMode: Boolean = false, overCapTombs: Boolean = false,
     tombDirs: Seq[String] = Seq.empty)(
     // second parameter list: per-plan derived state, not part of the
-    // scan's case-class identity (the stats provider is a cache; the
-    // scoped tombstone sets derive from root+version like tombFilter)
-    val dirStats: graft.io.DirStatsProvider,
-    val scopedTombs: Seq[(Long, util.HashSet[Any])] = Seq.empty)
+    // scan's case-class identity (the stats provider is a cache)
+    val dirStats: graft.io.DirStatsProvider)
   extends Scan with Batch
   with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
   with org.apache.spark.sql.connector.read.SupportsReportStatistics {
@@ -1331,7 +1316,7 @@ case class GraftScan(delegate: org.apache.spark.sql.execution.datasources
     if (allPruned || (runtimeDirs.isDefined && scanDirs.isEmpty))
       return Array.empty
     val base = delegate.toBatch.planInputPartitions()
-    if (!dirRequested && runtimeDirs.isEmpty && scopedTombs.isEmpty)
+    if (!dirRequested && runtimeDirs.isEmpty && !epochScoped)
       return base
     // repack the delegate's partitions PER DIRECTORY: drop files the
     // runtime filter excluded, and give every partition a constant
@@ -1342,7 +1327,7 @@ case class GraftScan(delegate: org.apache.spark.sql.execution.datasources
     val wanted = scanDirs.toSet
     val byDir = files.groupBy(f => dirOf(f.toPath.toString))
       .collect { case (Some(d), fs) if wanted.contains(d) => (d, fs) }
-    val tag = dirRequested || scopedTombs.nonEmpty
+    val tag = dirRequested || epochScoped
     byDir.toArray.sortBy(_._1).flatMap { case (d, fs) =>
       FilePartition.getFilePartitions(session, fs.toSeq,
         session.sessionState.conf.filesMaxPartitionBytes)
@@ -1352,35 +1337,32 @@ case class GraftScan(delegate: org.apache.spark.sql.execution.datasources
     }
   }
 
+  /** An epoch-scoped tombstone is live, so the merge needs each
+    * partition's directory epoch: partitions are tagged. Untagged, every
+    * partition reads as epoch 0 — exact while all tombstones are
+    * unscoped, since those outrank every epoch.
+    */
+  private def epochScoped: Boolean =
+    tombDirs.exists(graft.io.MergeOnRead.tombEpoch(_).isDefined)
+
   override def createReaderFactory(): PartitionReaderFactory = {
     if (overCapTombs) refuseOverCap()
     val inner = delegate.toBatch.createReaderFactory()
-    if (scopedTombs.nonEmpty) {
-      // epoch-scoped merge (a MoR UPDATE's tombstones): the applicable
-      // key sets depend on the partition's DIRECTORY epoch, so the
-      // filter sits outermost over dir-tagged partitions
-      val (key, keyType, global) = tombFilter.get
-      val idx = delegate.readSchema().fieldIndex(key)
-      val mid =
-        if (dirRequested) new DirAppendingReaderFactory(inner)
-        else inner
-      return new EpochKeyFilteringReaderFactory(mid, idx, keyType,
-        global, scopedTombs, innerTakesTag = dirRequested)
+    val mid =
+      if (dirRequested) new DirAppendingReaderFactory(inner) else inner
+    tombKeys match {
+      case None => mid
+      case Some((key, keyType, ranks)) =>
+        new TombstoneFilteringReaderFactory(mid,
+          delegate.readSchema().fieldIndex(key), keyType, ranks,
+          innerTakesTag = dirRequested)
     }
-    val withTomb = tombFilter match {
-      case None => inner
-      case Some((key, keyType, keys)) =>
-        val idx = delegate.readSchema().fieldIndex(key)
-        new KeyFilteringReaderFactory(inner, idx, keyType, keys)
-    }
-    if (dirRequested) new DirAppendingReaderFactory(withTomb)
-    else withTomb
   }
 
   override def description(): String =
     s"GraftScan root=$root version=$version " +
       s"keptDirs=${keptDirs.size} skippedDirs=${skippedDirs.size} " +
-      s"mor=${tombFilter.nonEmpty} " +
+      s"mor=${tombKeys.nonEmpty} " +
       s"pushedAggregate=${delegate.pushedAggregate.nonEmpty}" +
       (if (opState.isDefined) " rowOp=true" else "") +
       (if (topNMode) s" topNDirs=${limitDropped.size}"
@@ -1421,17 +1403,20 @@ class DirAppendingReaderFactory(inner: PartitionReaderFactory)
   }
 }
 
-/** EPOCH-SCOPED tombstone merge (a MoR UPDATE's read side): each
-  * partition's applicable key sets are the GLOBAL set plus every
-  * scoped set whose epoch outranks the partition directory's epoch —
-  * so an update's own `morins-<e>` rows survive its `tombstones-e<e>`
-  * while every older copy of the key is hidden. Sits outermost over
-  * dir-tagged partitions; `innerTakesTag` = the delegate chain itself
-  * consumes the tag (the `_dir`-appending factory).
+/** The merge-on-read rule per row ([[graft.io.MergeOnRead]]): drops a
+  * row whose key's highest live tombstone rank `te` (`ranks`; an
+  * unscoped tombstone ranks Long.MaxValue) outranks its directory's
+  * epoch `de` — taken from a [[DirTaggedPartition]], 0 for an untagged
+  * one. So an update's own `morins-<e>` rows survive its
+  * `tombstones-e<e>` while every older copy of the key is hidden.
+  * Row-based by necessity (a filtered ColumnarBatch would need
+  * rebuilding); the cost lasts only until the table folds its
+  * tombstones. `innerTakesTag` = the inner chain itself consumes the
+  * tag (the `_dir`-appending factory).
   */
-class EpochKeyFilteringReaderFactory(inner: PartitionReaderFactory,
-    keyIndex: Int, keyType: DataType, global: util.HashSet[Any],
-    scoped: Seq[(Long, util.HashSet[Any])], innerTakesTag: Boolean)
+class TombstoneFilteringReaderFactory(inner: PartitionReaderFactory,
+    keyIndex: Int, keyType: DataType,
+    ranks: util.HashMap[Any, java.lang.Long], innerTakesTag: Boolean)
   extends PartitionReaderFactory {
 
   override def supportColumnarReads(partition: InputPartition): Boolean =
@@ -1439,57 +1424,20 @@ class EpochKeyFilteringReaderFactory(inner: PartitionReaderFactory,
 
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
-    val tagged = partition.asInstanceOf[DirTaggedPartition]
-    val epoch = graft.io.MergeOnRead.dirEpoch(tagged.dir)
-    val sets: Array[util.HashSet[Any]] =
-      (Seq(global) ++ scoped.collect { case (e, ks) if e > epoch => ks })
-        .filterNot(_.isEmpty).toArray
-    val delegate =
-      inner.createReader(if (innerTakesTag) tagged else tagged.inner)
-    if (sets.isEmpty) delegate
-    else new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean = {
-        while (delegate.next()) {
-          val r = delegate.get()
-          val k = r.get(keyIndex, keyType)
-          var hit = false
-          var i = 0
-          while (!hit && i < sets.length) {
-            hit = sets(i).contains(k); i += 1
-          }
-          if (!hit) { current = r; return true }
-        }
-        false
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = delegate.close()
+    val (de, own) = partition match {
+      case t: DirTaggedPartition =>
+        (graft.io.MergeOnRead.dirEpoch(t.dir),
+          if (innerTakesTag) t else t.inner)
+      case p => (0L, p)
     }
-  }
-}
-
-/** Row-level tombstone merge: wraps the parquet readers and drops rows
-  * whose key is in the collected tombstone set. Row-based by necessity
-  * (a filtered ColumnarBatch would need rebuilding); the cost lasts only
-  * until the table folds its tombstones.
-  */
-class KeyFilteringReaderFactory(inner: PartitionReaderFactory,
-    keyIndex: Int, keyType: DataType, keys: util.HashSet[Any])
-  extends PartitionReaderFactory {
-
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    false
-
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] = {
-    val delegate = inner.createReader(partition)
+    val delegate = inner.createReader(own)
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
       override def next(): Boolean = {
         while (delegate.next()) {
           val r = delegate.get()
-          val k = r.get(keyIndex, keyType)
-          if (!keys.contains(k)) { current = r; return true }
+          val te = ranks.get(r.get(keyIndex, keyType))
+          if (te == null || te <= de) { current = r; return true }
         }
         false
       }

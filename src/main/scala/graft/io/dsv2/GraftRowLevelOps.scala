@@ -59,10 +59,10 @@ object GraftRowLevelOps {
   * ([[GraftDeltaUpdate]]): an EPOCH-SCOPED tombstone + re-insert pair
   * in one appending commit — the scoping ([[MergeOnRead.tombEpoch]])
   * is what makes the pair readable, since a GLOBAL tombstone would
-  * hide the re-inserted rows themselves. While a LEGACY (unscoped)
-  * tombstone is live, UPDATE falls back to the copy-on-write rewrite
-  * (which also folds it). MERGE is always copy-on-write. The merge
-  * key is a ROW IDENTITY (the Iceberg identifier-field contract):
+  * hide the re-inserted rows themselves. While an unscoped tombstone
+  * (what every MoR DELETE writes) is live, UPDATE falls back to the
+  * copy-on-write rewrite (which also folds it). MERGE is always
+  * copy-on-write. The merge key is a ROW IDENTITY (the Iceberg identifier-field contract):
   * with duplicate keys, MoR DELETE/UPDATE act at KEY granularity —
   * a predicate matching only SOME rows of a key still tombstones the
   * whole key (UPDATE rewrites exactly the matched rows).
@@ -84,10 +84,10 @@ class GraftRowLevelBuilder(s: SparkSession, root: String, version: Int,
       new GraftDeltaDelete(s, root, version, tableSchema, dataDirs,
         tombDirs, morKey.get, colMap)
     else if (info.command == Command.UPDATE && morKey.nonEmpty &&
-        // legacy (unscoped) tombstones outrank every epoch and would
-        // hide this update's re-inserted rows — those tables keep the
-        // copy-on-write rewrite (which also folds them), the
-        // documented pre-epoch behavior
+        // unscoped tombstones (MoR DELETEs') outrank every epoch and
+        // would hide this update's re-inserted rows — while one is
+        // live, UPDATE takes the copy-on-write rewrite (which also
+        // folds it)
         tombDirs.forall(t => MergeOnRead.tombEpoch(t).isDefined))
       new GraftDeltaUpdate(s, root, version, tableSchema, dataDirs,
         tombDirs, morKey.get, colMap)

@@ -22,11 +22,12 @@ import graft.io.dsv2.GraftScan
   * a 10⁸-key takedown on a 100 TB table OOMs the driver — so the
   * scan builder stops collecting, marks the scan
   * ([[GraftScan.overCapTombs]]), and THIS strategy re-plans the
-  * relation as [[MergeOnRead.snapshot]]'s logical plan: data parquet
-  * anti-joined against tombstone-key parquet (epoch-grouped when the
-  * deletes are a MoR update's), shuffled by Spark's join machinery —
-  * correct and bounded at any delete volume. Results are identical to
-  * the reader-filter regime; only the physical strategy differs.
+  * relation as [[MergeOnRead.snapshot]]'s logical plan: the data
+  * parquet, tagged with each directory's epoch, anti-joined against the
+  * tombstones' (key, highest rank) frame — the same rule the reader
+  * filter applies — shuffled by Spark's join machinery, correct and
+  * bounded at any delete volume. Results are identical to the
+  * reader-filter regime; only the physical strategy differs.
   *
   * Installed automatically with every graft catalog
   * ([[graft.io.dsv2.GraftCatalog.initialize]]) and by
@@ -46,12 +47,12 @@ class MorAntiJoinStrategy
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case r: DataSourceV2ScanRelation => r.scan match {
       case g: GraftScan if g.overCapTombs && !g.rowOp &&
-          g.colMap.isEmpty && g.tombFilter.isDefined &&
+          g.colMap.isEmpty && g.tombKeys.isDefined &&
           !r.output.exists(_.name == "_dir") =>
-        val key = g.tombFilter.get._1
+        val key = g.tombKeys.get._1
         val snap = MergeOnRead.snapshot(g.session, g.root, key,
           Some(g.version))
-        // defensive: a drifted table whose flat read resolves fewer
+        // defensive: a drifted table whose snapshot resolves fewer
         // columns than the relation advertises falls through to the
         // scan's loud refusal rather than a wrong-schema substitute
         if (!r.output.forall(a => snap.columns.contains(a.name))) Nil

@@ -6,20 +6,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.{Manifest, MergeOnRead}
 
-/** The round-16 optimization to [[MergeOnRead.snapshot]]: on a
-  * uniform-schema table the epoch-scoped merge runs as ONE
-  * epoch-conditioned anti-join against a (key, max tombstone epoch)
-  * frame instead of a distinct + broadcast + anti-join PER epoch
-  * group. This spec pins the optimization's correctness contract:
+/** [[MergeOnRead.snapshot]]'s one merge form — every epoch group read
+  * tagged with its epoch, one epoch-conditioned anti-join against a
+  * (key, max tombstone rank) frame — pinned on the shapes that once had
+  * forms of their own:
   *
-  *  - flat and grouped forms return IDENTICAL rows on the full op mix
-  *    (base data + two overlapping scoped updates + a later global
-  *    tombstone), at head and through version pins;
+  *  - the full op mix (base data + two overlapping scoped updates + a
+  *    later unscoped tombstone) returns the expected rows at every
+  *    version, at head and time-traveled;
   *  - a drift-evolved table (late column in a newer morins directory)
-  *    does NOT take the flat path — per-group unionByName null-fill
-  *    semantics are preserved bit-for-bit.
-  *
-  * `spark.graft.mor.flatSnapshot=false` is the A/B lever.
+  *    surfaces the late column, null-filled for the rows written before
+  *    it (unionByName allowMissingColumns semantics).
   */
 class MorFlatSnapshotSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -38,20 +35,14 @@ class MorFlatSnapshotSpec extends AnyFunSuite {
     Manifest.commit(spark, root, s"$root/data/b0")
   }
 
-  private def grouped[T](body: => T): T = {
-    spark.conf.set("spark.graft.mor.flatSnapshot", "false")
-    try body
-    finally spark.conf.unset("spark.graft.mor.flatSnapshot")
-  }
-
   private def rowsOf(root: String, version: Option[Int] = None)
       : Seq[(Long, Long)] =
     MergeOnRead.snapshot(spark, root, "k", version)
       .select(col("k"), col("v"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
 
-  test("flat and grouped merges agree on base + two overlapping " +
-      "scoped updates + a global tombstone, at head and time-traveled") {
+  test("base + two overlapping scoped updates + an unscoped tombstone " +
+      "read the expected rows at every version") {
     val root = freshRoot("flat_snap_mix")
     seed(root, 60)
     def upd(keys: Seq[Long], bump: Long): Unit = {
@@ -63,20 +54,24 @@ class MorFlatSnapshotSpec extends AnyFunSuite {
     }
     upd(Seq(1L, 2L, 3L), 1000)        // epoch 1
     upd(Seq(3L, 4L), 100000)          // epoch 2, overlaps key 3
-    // global (unscoped) tombstone AFTER the scoped ones — hides the
-    // named keys at EVERY epoch, including the epoch-2 rewrites
+    // unscoped tombstone AFTER the scoped ones — hides the named keys
+    // at EVERY epoch, including the epoch-2 rewrites
     MergeOnRead.deleteKeys(spark, root, "k",
       Seq(2L, 4L, 7L).toDF("k"), s"$root/data")
+    val base = (0L until 60L).map(i => i -> i * 10).toMap
+    val v1 = base ++ Seq(1L -> 1010L, 2L -> 1020L, 3L -> 1030L)
+    val v2 = v1 ++ Seq(3L -> 101030L, 4L -> 100040L)
+    val v3 = v2 -- Seq(2L, 4L, 7L)
+    val expected = Seq(base, v1, v2, v3)
     val versions = Manifest.versions(spark, root)
-    for (v <- versions.map(Some(_)) :+ None) {
-      val flat = rowsOf(root, v)
-      val slow = grouped(rowsOf(root, v))
-      assert(flat == slow,
-        s"flat vs grouped snapshot must be row-identical at $v")
+    assert(versions.size == expected.size)
+    for ((v, want) <- versions.zip(expected) :+ (versions.last, v3)) {
+      assert(rowsOf(root, Some(v)) == want.toSeq.sorted, s"version $v")
     }
+    assert(rowsOf(root) == v3.toSeq.sorted, "head")
     val head = rowsOf(root).toMap
     assert(!head.contains(2L) && !head.contains(4L) && !head.contains(7L),
-      "the global tombstone must hide its keys at every epoch")
+      "the unscoped tombstone must hide its keys at every epoch")
     assert(head(3L) == 101030L,
       "overlapping scoped updates must compose (second planned from " +
         "the first's merged snapshot)")
@@ -84,7 +79,7 @@ class MorFlatSnapshotSpec extends AnyFunSuite {
   }
 
   test("a drift-evolved table (late column in a newer morins dir) " +
-      "does not take the flat path — grouped null-fill is preserved") {
+      "surfaces the late column, null-filled for older rows") {
     val root = freshRoot("flat_snap_drift")
     seed(root, 10)
     // epoch-1 update whose rewritten rows carry a LATE column
@@ -102,11 +97,7 @@ class MorFlatSnapshotSpec extends AnyFunSuite {
     assert(byK(1L).contains("x") && byK(5L).isEmpty,
       "late column fills null for pre-drift rows (unionByName " +
         "allowMissingColumns semantics)")
-    val slow = grouped(MergeOnRead.snapshot(spark, root, "k"))
-    assert(snap.select(snap.columns.sorted.map(col): _*).collect()
-        .map(_.toString).sorted.toSeq ==
-      slow.select(slow.columns.sorted.map(col): _*).collect()
-        .map(_.toString).sorted.toSeq,
-      "drift tables are grouped-path either way — identical output")
+    assert(byK.toSeq.sortBy(_._1) == (0L until 10L).map(k =>
+      k -> (if (k < 3) Some("x") else None)))
   }
 }
